@@ -32,6 +32,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from openalex_neo4j_spark.schemas import LINEAGE_SCHEMA
+from openalex_neo4j_spark.session import read_parquet_or_none
 
 
 def _lineage_path(root: str) -> str:
@@ -39,10 +40,10 @@ def _lineage_path(root: str) -> str:
 
 
 def read_lineage(spark: SparkSession, root: str) -> DataFrame:
-    try:
-        return spark.read.parquet(_lineage_path(root))
-    except Exception:
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
+    """The lineage rows under ``root``; empty only when no lineage was
+    ever written. A lineage that exists but cannot be read raises."""
+    df = read_parquet_or_none(spark, _lineage_path(root))
+    return spark.createDataFrame([], LINEAGE_SCHEMA) if df is None else df
 
 
 def append_lineage(spark: SparkSession, root: str, rows: list[tuple]) -> None:

@@ -243,6 +243,11 @@ def simhash_signatures(df: DataFrame, id_col: str = "doc_id",
     sum over tokens of (2*bit_b - 1) > 0, duplicate tokens with
     multiplicity, exactly as before.
     """
+    if bits > 62:
+        # bit 63 does not fit a signed BIGINT: CAST(1 << 63 AS BIGINT)
+        # is NULL and would silently NULL every signature
+        raise ValueError(f"simhash_signatures supports bits <= 62, got "
+                         f"{bits}; use simhash64_signatures for 64 bits")
     nhex = bits // 4
     # Expressions are built as batched SQL strings (selectExpr /
     # F.expr), not per-call Column compositions: the ``bits``-wide

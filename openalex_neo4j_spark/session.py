@@ -85,6 +85,24 @@ def get_spark(
     return b.getOrCreate()
 
 
+def read_parquet_or_none(spark: SparkSession, path: str):
+    """``spark.read.parquet(path)``, or None when the path is missing
+    or holds no data files (e.g. only staging/marker leftovers).
+
+    Any other read error re-raises: turning a transient or corrupt read
+    into "no prior state" would let a caller silently replace or ignore
+    history."""
+    if not os.path.exists(path):
+        return None
+    from pyspark.errors import AnalysisException
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if "UNABLE_TO_INFER_SCHEMA" in str(e) or "PATH_NOT_FOUND" in str(e):
+            return None
+        raise
+
+
 def ckpt(df, level: str | None = None, eager: bool = True):
     """Eager lineage-truncating checkpoint for LARGE intermediates.
 

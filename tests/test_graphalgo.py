@@ -1,5 +1,7 @@
 """Citation-rank (iterative propagation) and bucketed-write tests."""
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -32,8 +34,24 @@ def test_rank_on_built_graph(spark, small_graph):
     assert ranks.filter(F.col("rank") <= 0).count() == 0
 
 
+def write_bucketed(df, table: str, key: str, num_buckets: int = 16) -> None:
+    """Bucketed + sorted catalog table: joins on ``key`` between
+    co-bucketed tables need no exchange (the warehouse analog of
+    pre-partitioning for repeated co-located joins — SURVEY §4)."""
+    spark = df.sparkSession
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    # a stale managed location without catalog metadata (e.g. from a
+    # previous session) blocks re-creation — clear it
+    wh = spark.conf.get("spark.sql.warehouse.dir", "")
+    if wh.startswith("file:"):
+        wh = wh[5:]
+    if wh:
+        shutil.rmtree(f"{wh}/{table}", ignore_errors=True)
+    (df.write.mode("overwrite").bucketBy(num_buckets, key).sortBy(key)
+     .format("parquet").saveAsTable(table))
+
+
 def test_bucketed_write_joins_without_exchange(spark, tmp_path):
-    from openalex_neo4j_spark.materialize import write_bucketed
     from openalex_neo4j_spark.plans import explain_str
 
     a = spark.createDataFrame([(i, f"v{i}") for i in range(100)], ["id", "va"])

@@ -5,12 +5,15 @@ re-run against a live store)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+import openalex_neo4j_spark.materialize as mat
 from openalex_neo4j_spark.corpus import build_world, pages_dataframe
 from openalex_neo4j_spark.materialize import merge_graph, write_graph
-from openalex_neo4j_spark.pipeline import build_graph
+from openalex_neo4j_spark.pipeline import GraphTables, build_graph, build_triples
 
 
 @pytest.fixture(scope="module")
@@ -23,14 +26,46 @@ def split_worlds(spark):
     return pages.filter(h == 0), pages.filter(h == 1), pages
 
 
-def test_merge_import_is_cumulative_and_refreshes_counts(
-        spark, split_worlds, tmp_path_factory):
+@pytest.fixture(scope="module")
+def half_graphs(split_worlds):
     p_a, p_b, _ = split_worlds
+    return build_graph(p_a), build_graph(p_b)
+
+
+LABELS = ["Work", "Author", "Institution", "Source", "Topic", "Funder",
+          "Publisher"]
+
+
+def _rows(df, cols=("subj", "pred", "obj")) -> list[tuple]:
+    return [tuple(r) for r in df.select(*cols).collect()]
+
+
+def _data_files(root: str) -> dict[str, int]:
+    """Parquet data file -> inode, for every table except lineage."""
+    out = {}
+    for d, _, files in os.walk(root):
+        rel = os.path.relpath(d, root)
+        if rel.split(os.sep)[0] == "lineage":
+            continue
+        for f in files:
+            if f.endswith(".parquet"):
+                out[os.path.join(rel, f)] = os.stat(os.path.join(d, f)).st_ino
+    return out
+
+
+def _committed(spark, root: str):
+    nodes = {lab: spark.read.parquet(f"{root}/nodes_{lab.lower()}")
+             for lab in LABELS}
+    return nodes, spark.read.parquet(f"{root}/edges").select(
+        "subj", "pred", "obj")
+
+
+def test_merge_import_is_cumulative_and_refreshes_counts(
+        spark, half_graphs, tmp_path_factory):
+    g_a, g_b = half_graphs
     root = str(tmp_path_factory.mktemp("kg_merge"))
 
-    g_a = build_graph(p_a)
     counts_a = write_graph(g_a, root)
-    g_b = build_graph(p_b)
     counts_m = merge_graph(g_b, root)
 
     # cumulative: merged Work ids are a superset of both halves' ids
@@ -80,12 +115,11 @@ def test_merge_import_is_cumulative_and_refreshes_counts(
     assert t_counts == got
 
 
-def test_merge_import_is_idempotent(spark, split_worlds,
+def test_merge_import_is_idempotent(spark, half_graphs,
                                     tmp_path_factory):
-    p_a, p_b, _ = split_worlds
+    g_a, g_b = half_graphs
     root = str(tmp_path_factory.mktemp("kg_merge_idem"))
-    write_graph(build_graph(p_a), root)
-    g_b = build_graph(p_b)
+    write_graph(g_a, root)
     first = merge_graph(g_b, root)
     again = merge_graph(g_b, root)
     assert again == first  # re-importing the same batch changes nothing
@@ -106,3 +140,121 @@ def test_merge_last_wins_on_node_props(spark, split_worlds,
     after = spark.read.parquet(f"{root}/nodes_work")
     assert after.filter(F.col("abstract").isNotNull()).count() == 0
     assert after.count() == n_before
+
+
+def test_merged_triples_equal_rebuild_from_committed_tables(
+        spark, half_graphs, tmp_path_factory):
+    """Triple files carried over by hard link must not go stale: after
+    a merge the triples table is exactly build_triples over the
+    committed node and edge tables."""
+    g_a, g_b = half_graphs
+    root = str(tmp_path_factory.mktemp("kg_merge_triples"))
+    write_graph(g_a, root)
+    counts = merge_graph(g_b, root)
+    got = _rows(spark.read.parquet(f"{root}/triples"))
+    nodes, edges = _committed(spark, root)
+    want = _rows(build_triples(nodes, edges))
+    assert len(got) == len(set(got)) == counts["triples"]
+    assert set(got) == set(want)
+
+
+def test_remerge_writes_no_table_file(spark, half_graphs, tmp_path_factory):
+    """Re-merging a graph that is already merged changes no row: no
+    parquet file appears outside lineage/, and every data file keeps
+    its inode."""
+    g_a, g_b = half_graphs
+    root = str(tmp_path_factory.mktemp("kg_merge_noop"))
+    write_graph(g_a, root)
+    first = merge_graph(g_b, root, with_search_indexes=True)
+    before = _data_files(root)
+    again = merge_graph(g_b, root, with_search_indexes=True)
+    assert again == first
+    assert _data_files(root) == before
+
+
+def test_edge_only_delta_appends_and_keeps_other_partitions(
+        spark, half_graphs, tmp_path_factory):
+    """A delta that only adds HAS_TOPIC edges (which feed no derived
+    count) rewrites no existing file: every old file keeps its inode,
+    and new files land only in the pred=HAS_TOPIC partitions of edges
+    and triples."""
+    g_a, _ = half_graphs
+    root = str(tmp_path_factory.mktemp("kg_merge_append"))
+    write_graph(g_a, root)
+    nodes, edges = _committed(spark, root)
+    have = set(_rows(edges.filter(F.col("pred") == "HAS_TOPIC")))
+    works = sorted(r["id"] for r in nodes["Work"].select("id").collect())
+    topics = sorted(r["id"] for r in nodes["Topic"].select("id").collect())
+    extra = [(w, "HAS_TOPIC", t) for w in works for t in topics
+             if (w, "HAS_TOPIC", t) not in have][:5]
+    assert extra
+    delta = GraphTables(
+        nodes=nodes,
+        edges=edges.unionByName(
+            spark.createDataFrame(extra, "subj string, pred string, obj string")),
+        triples=None, mentions=None)
+    before = _data_files(root)
+    counts = merge_graph(delta, root)
+
+    after = _data_files(root)
+    assert all(after.get(f) == ino for f, ino in before.items())
+    new = set(after) - set(before)
+    assert {os.path.dirname(f) for f in new} == {
+        os.path.join("edges", "pred=HAS_TOPIC"),
+        os.path.join("triples", "pred=HAS_TOPIC")}
+    merged = _rows(spark.read.parquet(f"{root}/edges"))
+    assert len(merged) == len(set(merged)) == counts["edges"]
+    assert set(extra) <= set(merged)
+
+
+def _crash_before_rename(monkeypatch, target):
+    real = mat._commit_table
+
+    def commit(staged, path):
+        if path == target:  # staged dir linked and filled, not promoted
+            assert os.path.isdir(staged)
+            raise RuntimeError("killed before commit")
+        real(staged, path)
+    monkeypatch.setattr(mat, "_commit_table", commit)
+
+
+def _crash_between_renames(monkeypatch, target):
+    real = os.rename
+
+    def rename(src, dst):
+        # the live dir is already moved aside; the staged dir is not
+        # promoted yet
+        if dst == target:
+            raise RuntimeError("killed between renames")
+        real(src, dst)
+    monkeypatch.setattr(os, "rename", rename)
+
+
+@pytest.mark.parametrize("crash", [_crash_before_rename,
+                                   _crash_between_renames])
+def test_merge_crash_leaves_old_or_new_table(spark, half_graphs,
+                                             tmp_path_factory, monkeypatch,
+                                             crash):
+    """Kill the copy-on-write commit of the pred-partitioned edges table
+    at each crash point: it reads as exactly the old state with no
+    duplicate rows, and the next merge recovers and commits exactly the
+    new state."""
+    g_a, g_b = half_graphs
+    root = str(tmp_path_factory.mktemp("kg_merge_crash"))
+    epath = f"{root}/edges"
+    write_graph(g_a, root)
+    old = _rows(spark.read.parquet(epath))
+
+    crash(monkeypatch, epath)
+    with pytest.raises(RuntimeError, match="killed"):
+        merge_graph(g_b, root)
+    monkeypatch.undo()
+    mat._recover_table(epath)  # what the next merge does first
+    got = _rows(spark.read.parquet(epath))
+    assert len(got) == len(set(got))
+    assert set(got) == set(old)
+
+    counts = merge_graph(g_b, root)
+    got = _rows(spark.read.parquet(epath))
+    assert len(got) == len(set(got)) == counts["edges"]
+    assert set(got) == set(old) | set(_rows(g_b.edges))

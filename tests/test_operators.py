@@ -120,6 +120,13 @@ class TestSimHash:
         d_far = bin(int(got[0]) ^ int(got[4])).count("1")
         assert d_near <= d_far
 
+    def test_more_than_62_bits_rejected(self, docs):
+        # bit 63 would overflow BIGINT and NULL every signature
+        with pytest.raises(ValueError, match="62"):
+            simhash_signatures(docs, bits=64)
+        got = simhash_signatures(docs, bits=32).collect()
+        assert got and all(r["simhash"] is not None for r in got)
+
 
 class TestSimilarity:
     @pytest.fixture(scope="class")

@@ -233,3 +233,22 @@ def test_file_granular_chunk_plan_scans_only_chunk_files(spark, pages,
     bdf = spark.read.schema(stored.schema).parquet(*by_bucket[1])
     assert sorted(bdf.inputFiles()) == sorted(by_bucket[1])
     assert set(by_bucket[1]).isdisjoint(by_bucket[0])
+
+
+def test_read_lineage_raises_on_unreadable_lineage(spark, tmp_path):
+    """Only a missing or data-less lineage dir reads as empty lineage;
+    an unreadable one raises instead of silently resetting resume
+    state."""
+    import os
+
+    root = str(tmp_path)
+    assert read_lineage(spark, root).count() == 0
+    os.makedirs(f"{root}/lineage")
+    open(f"{root}/lineage/_SUCCESS", "w").close()
+    assert read_lineage(spark, root).count() == 0
+
+    with open(f"{root}/lineage/part-00000.parquet", "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(Exception) as e:
+        read_lineage(spark, root).collect()
+    assert "parquet" in str(e.value).lower()
