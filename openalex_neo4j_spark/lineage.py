@@ -212,22 +212,21 @@ def resumable_extract(
                 "bucket", F.pmod(F.hash(F.col("url")), F.lit(num_buckets))
             )
             mentions.write.mode("overwrite").partitionBy("bucket").parquet(out)
-        try:
-            out_rows = spark.read.parquet(out).filter(
-                F.col("bucket").isin(chunk)).count()
-        except Exception:
-            out_rows = 0  # chunk of entirely empty buckets, nothing written yet
+        written = read_parquet_or_none(spark, out)
+        # None: a chunk of entirely empty buckets, nothing written yet
+        out_rows = 0 if written is None else written.filter(
+            F.col("bucket").isin(chunk)).count()
         wall = int((time.time() - t0) * 1000)
         per_bucket_wall = wall // max(len(chunk), 1)
         append_lineage(spark, root, [
             ("extract", b, None, out_rows, per_bucket_wall, "done", run_id)
             for b in chunk
         ])
-    try:
-        return spark.read.parquet(out).drop("bucket")
-    except Exception:
+    written = read_parquet_or_none(spark, out)
+    if written is None:
         from openalex_neo4j_spark.schemas import MENTION_SCHEMA
         return spark.createDataFrame([], MENTION_SCHEMA)
+    return written.drop("bucket")
 
 
 def resumable_stage(

@@ -15,15 +15,20 @@ Every table is a plain parquet directory under the warehouse root, and
 the table IS the set of parquet files under that directory: search,
 ``scripts/kg.py`` and pyarrow readers rely on nothing else.
 
-Re-imports (``merge_graph``, ``upsert_nodes``) commit through one
-file-level copy-on-write primitive, ``_cow_commit`` — the Delta Lake /
-Iceberg MERGE recipe (Armbrust et al., VLDB 2020) without a manifest:
-diff the table's new state against its current rows, tagged with the
-file each row lives in; rewrite only the files that hold a removed or
-changed row, plus the added rows; hard-link every other file into the
-staged directory; promote it with the two-rename ``_commit_table``. A
-merge therefore writes the delta plus the files it touches, not the
-table, and a re-import that changes nothing writes no table file.
+Every warehouse table, fresh (``write_graph``) or merged
+(``merge_graph``, ``upsert_nodes``), commits through one file-level
+copy-on-write primitive, ``_cow_commit`` — the Delta Lake / Iceberg
+MERGE recipe (Armbrust et al., VLDB 2020) without a manifest: write
+into a staged directory, promote it with the two-rename
+``_commit_table``. A fresh table is written whole. A merged one is
+diffed against its current rows, tagged with the file each row lives
+in: only the files that hold a removed or changed row are rewritten,
+plus the added rows, and every other file is hard-linked into the
+staged directory. A merge therefore writes the delta plus the files it
+touches, not the table, and a re-import that changes nothing writes no
+table file. A crash at any point leaves the previous table intact
+(``_recover_table`` puts it back if the crash fell between the two
+renames).
 """
 
 from __future__ import annotations
@@ -129,7 +134,12 @@ def _cow_commit(path: str, old: DataFrame | None, final: DataFrame,
 
     ``old`` is the bare ``spark.read.parquet(path)`` (None: no prior
     table), and ``final`` may read it lazily: nothing under ``path``
-    moves before the final rename. From the ``_diff`` of the two:
+    moves before the final rename.
+
+    With nothing to diff (no ``old``, or another schema: a new column
+    or type), ``final`` is written whole, laid out as Spark partitions
+    it, and counted from the parquet footers. Otherwise, from the
+    ``_diff`` of the two:
 
     - a file holding a row that ``final`` lacks is *touched*: its
       surviving rows are rewritten together with the added rows, one
@@ -139,16 +149,22 @@ def _cow_commit(path: str, old: DataFrame | None, final: DataFrame,
       over;
     - nothing touched and nothing added: no write and no commit.
 
-    A schema change (a new column or type) rewrites the whole table.
-    The row count comes from the diff (old − dropped + added), and the
-    returned table reuses ``old``'s schema: no re-read of the committed
-    files."""
+    The row count then comes from the diff (old − dropped + added), and
+    the returned table reuses ``old``'s schema: no re-read of the
+    committed files."""
     spark, cols = final.sparkSession, final.columns
+    staged = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     diff = _diff(old, final)
-    comparable = diff is not None
-    if not comparable:  # every old file is replaced
-        diff = final.select(*cols, F.lit(None).cast("string").alias("_file"),
-                            F.lit(True).alias("_new"))
+    if diff is None:
+        w = final.write
+        if partition_by:
+            w = w.partitionBy(partition_by)
+        w.parquet(staged)
+        _commit_table(staged, path)
+        # the explicit schema reads an empty partitioned table too,
+        # which holds no data file to infer one from
+        table = spark.read.schema(final.schema).parquet(path)
+        return table, table.count()
     # the diff feeds two jobs (stats, then the rewrite): keep it in the
     # block store's disk tier instead of grouping twice
     diff = diff.persist(StorageLevel.DISK_ONLY)
@@ -157,36 +173,25 @@ def _cow_commit(path: str, old: DataFrame | None, final: DataFrame,
         touched = {r["_file"] for r in stats if not r["_new"]}
         added = sum(r["count"] for r in stats if r["_file"] is None)
         n_rows = sum(r["count"] for r in stats if r["_new"])
-        if comparable and not touched and not added:
+        if not touched and not added:
             return old, n_rows
-        n_rewrite = added + sum(r["count"] for r in stats
-                                if r["_new"] and r["_file"] in touched)
-        kept = []
-        if comparable:
-            root = os.path.realpath(path)
-            gone = {os.path.relpath(
-                os.path.realpath(unquote(urlparse(u).path)), root)
-                for u in touched}
-            kept = [rel for rel in _data_files(path) if rel not in gone]
-
-        staged = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        # an emptied table still gets one (empty) file for its schema
-        if n_rewrite or not kept:
-            rows = diff.filter(F.col("_new") & (
-                F.col("_file").isNull() | F.col("_file").isin(*touched))
-            ).select(*cols)
-            if partition_by:
-                rows.repartition(partition_by).write.partitionBy(
-                    partition_by).parquet(staged)
-            else:
-                rows.coalesce(1).write.parquet(staged)
-        else:
-            os.makedirs(staged)
-        for rel in kept:
-            _link_file(path, staged, rel)
+        rows = diff.filter(F.col("_new") & (
+            F.col("_file").isNull() | F.col("_file").isin(*touched))
+        ).select(*cols)
+        if partition_by:
+            rows.repartition(partition_by).write.partitionBy(
+                partition_by).parquet(staged)
+        else:  # an emptied table still gets one (empty) file for its schema
+            rows.coalesce(1).write.parquet(staged)
+        root = os.path.realpath(path)
+        gone = {os.path.relpath(
+            os.path.realpath(unquote(urlparse(u).path)), root)
+            for u in touched}
+        for rel in _data_files(path):
+            if rel not in gone:
+                _link_file(path, staged, rel)
         _commit_table(staged, path)
-        reader = spark.read.schema(old.schema) if comparable else spark.read
-        return reader.parquet(path), n_rows
+        return spark.read.schema(old.schema).parquet(path), n_rows
     finally:
         diff.unpersist()
 
@@ -206,51 +211,16 @@ def _last_wins(old: DataFrame | None, new: DataFrame,
 
 
 def upsert_nodes(spark: SparkSession, path: str, new_df: DataFrame,
-                 key: str = "id", backend: str = "plain") -> DataFrame:
+                 key: str = "id") -> DataFrame:
     """Last-wins MERGE upsert (A2): re-imported rows overwrite stored
     properties, like the reference's ``MERGE … SET n += item``
     (neo4j_client.py:246-252; last-wins asserted in its
     tests/integration/test_neo4j_integration.py:134-151).
 
-    The plain backend commits through ``_cow_commit``: only the files
-    holding an updated key are rewritten, and a crash at any point
-    leaves the previous table readable (kill tests in
-    tests/test_import_query.py and tests/test_merge_graph.py).
-
-    ``backend="snapshot"`` routes the same MERGE through
-    :class:`~openalex_neo4j_spark.table_format.SnapshotTable` instead:
-    versioned snapshots, min/max-key group pruning, time travel, and
-    safe concurrent writers — at the cost of the snapshot layout
-    (``_snapshots/`` + ``data/``) replacing the plain parquet directory.
-    """
-    if backend == "snapshot":
-        from openalex_neo4j_spark.table_format import SnapshotTable
-        t = SnapshotTable(spark, path, key=key)
-        # Migration guard: a path previously written by the PLAIN
-        # backend holds bare parquet files and no _snapshots/ dir.
-        # SnapshotTable would see version 0, commit only new_df, and
-        # every read would silently drop the previously merged rows
-        # (the old part files just sit unreferenced in the same
-        # directory). Fold the existing plain table in as the initial
-        # snapshot instead, so switching backends preserves state the
-        # same way staying on plain would.
-        if t.current_version() == 0:
-            _recover_table(path)  # a crashed plain commit counts too
-            # read only the TOP-LEVEL part files explicitly: the path
-            # can also hold orphan data/<uuid>/ group dirs from a
-            # snapshot first-merge that crashed before its manifest
-            # commit (current_version() still 0) — a bare
-            # read.parquet(path) would then see parquet leaves at
-            # mixed directory depths and raise "Conflicting directory
-            # structures", wedging the migration until manual cleanup
-            plain_parts = sorted(
-                os.path.join(path, f) for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ) if os.path.isdir(path) else []
-            if plain_parts:
-                t.merge(spark.read.parquet(*plain_parts))
-        t.merge(new_df)
-        return t.read()
+    Commits through ``_cow_commit``: only the files holding an updated
+    key are rewritten, and a crash at any point leaves the previous
+    table intact (kill tests in tests/test_import_query.py and
+    tests/test_merge_graph.py)."""
     old = _read_prior(spark, path)
     return _cow_commit(path, old, _last_wins(old, new_df, key))[0]
 
@@ -335,12 +305,12 @@ def merge_graph(g: GraphTables, root: str,
                                                enrich_node_counts)
 
     t0 = time.time()
-    paths = {name: f"{root}/{name}" for name in ["edges", "triples"]}
-    paths.update({label: f"{root}/nodes_{label.lower()}" for label in g.nodes})
+    names = [*g.nodes, "edges", "triples"]
     if with_search_indexes:
-        paths["index_fulltext"] = f"{root}/index_fulltext"
+        names.append("index_fulltext")
     # every read infers its schema with a Spark job: read them together
-    old = _concurrently(_read_prior, {t: (spark, p) for t, p in paths.items()})
+    old = _concurrently(_read_prior, {t: (spark, _table_path(root, t))
+                                      for t in names})
 
     # The final state of every table is checkpointed before any commit:
     # the node refresh, the triples and the fulltext index then read no
@@ -357,96 +327,64 @@ def merge_graph(g: GraphTables, root: str,
     final = {label: df if label == "Work" else ckpt(df, eager=False)
              for label, df in final.items()}
     _materialize([edges, *final.values()])
+    final.update(edges=edges, triples=build_triples(final, edges))
+    return _commit_graph(root, final, old, with_search_indexes,
+                         ("merge", "merge"), t0)
 
-    tables = {label: (paths[label], old[label], final[label])
-              for label in g.nodes}
-    tables["edges"] = (paths["edges"], old["edges"], edges, "pred")
-    tables["triples"] = (paths["triples"], old["triples"],
-                         build_triples(final, edges), "pred")
+
+def _table_path(root: str, name: str) -> str:
+    if name in ("edges", "triples", "index_fulltext"):
+        return f"{root}/{name}"
+    return f"{root}/nodes_{name.lower()}"
+
+
+def _commit_graph(root: str, final: dict[str, DataFrame],
+                  old: dict[str, DataFrame | None], with_search_indexes: bool,
+                  lineage: tuple[str, str], t0: float) -> dict[str, int]:
+    """Commit every table of a graph (``final``: one frame per node
+    label, plus ``edges`` and ``triples``) through ``_cow_commit``, each
+    as its own concurrent Spark job, then append the ``lineage`` row
+    (stage, run id); return the row counts. ``old`` maps a table name
+    to its prior rows (missing: nothing to diff). The fulltext index is
+    built from the checkpointed ``Work`` frame in the same batch."""
     if with_search_indexes:
         from openalex_neo4j_spark.search import work_fulltext_index
 
-        tables["index_fulltext"] = (
-            paths["index_fulltext"], old["index_fulltext"],
-            work_fulltext_index(final["Work"]))
+        final = {**final, "index_fulltext": work_fulltext_index(final["Work"])}
+    tables = {name: (_table_path(root, name), old.get(name), df,
+                     "pred" if name in ("edges", "triples") else None)
+              for name, df in final.items()}
     counts = {name: n for name, (_, n) in
               _concurrently(_cow_commit, tables).items()}
 
     from openalex_neo4j_spark.schemas import LINEAGE_SCHEMA
 
+    stage, run_id = lineage
     wall_ms = int((time.time() - t0) * 1000)
-    spark.createDataFrame(
-        [("merge", -1, None, counts["triples"], wall_ms, "done", "merge")],
+    final["edges"].sparkSession.createDataFrame(
+        [(stage, -1, None, counts["triples"], wall_ms, "done", run_id)],
         LINEAGE_SCHEMA,
     ).write.mode("append").parquet(f"{root}/lineage")
     return counts
 
 
-def _write(df: DataFrame, path: str, partition_by: list[str] | None = None) -> int:
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-    return -1  # caller counts from the written table to avoid recompute
-
-
 def write_graph(g: GraphTables, root: str,
                 with_search_indexes: bool = False) -> dict[str, int]:
-    """Write all tables; return row counts (A7 import-count report,
-    importer.py:95-98 / cli.py:159-181).
+    """Write all tables, replacing any graph already at ``root``; return
+    row counts (A7 import-count report, importer.py:95-98 /
+    cli.py:159-181).
 
     ``with_search_indexes=True`` additionally materializes the fulltext
-    inverted index over the written Work table (``index_fulltext``) —
-    the import-time DDL analog of the reference's fulltext/vector index
+    inverted index over the Work table (``index_fulltext``) — the
+    import-time DDL analog of the reference's fulltext/vector index
     creation (neo4j_client.py:134-144, 191-207; importer step 5). The
     search path then reads the stored index instead of rebuilding it
     per query.
     """
-    spark = g.edges.sparkSession
-    counts: dict[str, int] = {}
     t0 = time.time()
-    # all tables are independent outputs of already-checkpointed plans:
-    # write them as concurrent jobs (a sequential loop serializes ~9
-    # driver-blocking actions whose fixed latency no core count can
-    # shrink); the counts afterwards read parquet footer metadata only.
-    # The triples plan references every node table, so the fan-out
-    # needs the node checkpoints materialized first.
+    # the triples plan references every node table, so the concurrent
+    # commits need the node checkpoints materialized first
     _materialize(list(g.nodes.values()))
-
-    jobs = [(label, f"{root}/nodes_{label.lower()}", df, None)
-            for label, df in g.nodes.items()]
-    jobs.append(("edges", f"{root}/edges", g.edges, ["pred"]))
-    jobs.append(("triples", f"{root}/triples", g.triples, ["pred"]))
-
-    def _write_and_count(df: DataFrame, path: str, part) -> int:
-        # count INSIDE the worker thread: footer-metadata reads are
-        # cheap jobs, but nine of them in a serial post-write loop
-        # were nine more driver round-trips on the critical path
-        _write(df, path, partition_by=part)
-        return spark.read.parquet(path).count()
-
-    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-        futs = [(key, pool.submit(_write_and_count, df, path, part))
-                for key, path, df, part in jobs]
-        for key, f in futs:
-            counts[key] = f.result()
-    if with_search_indexes:
-        from openalex_neo4j_spark.search import work_fulltext_index
-
-        works_stored = spark.read.parquet(f"{root}/nodes_work")
-        _write(work_fulltext_index(works_stored), f"{root}/index_fulltext")
-        counts["index_fulltext"] = spark.read.parquet(
-            f"{root}/index_fulltext").count()
-
-    # lineage/metrics rows (north rule): one row per stage with wall
-    # time and output counts
-    wall_ms = int((time.time() - t0) * 1000)
-    lineage_rows = [
-        ("materialize", -1, None, counts["triples"], wall_ms, "done", "write")
-    ]
-    from openalex_neo4j_spark.schemas import LINEAGE_SCHEMA
-
-    spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).write.mode(
-        "append"
-    ).parquet(f"{root}/lineage")
-    return counts
+    return _commit_graph(root, {**g.nodes, "edges": g.edges,
+                                "triples": g.triples},
+                         {}, with_search_indexes, ("materialize", "write"), t0)

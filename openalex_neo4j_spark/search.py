@@ -234,10 +234,12 @@ def build_fulltext_index(df: DataFrame, id_col: str = "id",
 
 def work_fulltext_index(works: DataFrame) -> DataFrame:
     """The Work-table fulltext index (title + abstract), built ONCE at
-    import time and persisted next to the node tables
-    (materialize.write_graph) — the D2 analog of the reference's
-    ``CREATE FULLTEXT INDEX work_fulltext`` (neo4j_client.py:134-144).
-    The query path never rebuilds it."""
+    import time from the checkpointed Work frame and persisted next to
+    the node tables as the ``index_fulltext`` warehouse table
+    (materialize.write_graph / merge_graph), which commits through
+    ``materialize._cow_commit`` like every other table — the D2 analog
+    of the reference's ``CREATE FULLTEXT INDEX work_fulltext``
+    (neo4j_client.py:134-144). The query path never rebuilds it."""
     return build_fulltext_index(
         works.withColumn(
             "_ft_text",

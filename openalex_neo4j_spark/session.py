@@ -103,11 +103,10 @@ def read_parquet_or_none(spark: SparkSession, path: str):
         raise
 
 
-def ckpt(df, level: str | None = None, eager: bool = True):
+def ckpt(df, eager: bool = True):
     """Eager lineage-truncating checkpoint for LARGE intermediates.
 
-    Storage level defaults to ``DISK_ONLY`` (overridable via
-    ``SPARK_GRAFT_CKPT_LEVEL``): checkpoint blocks go to
+    Storage level is ``DISK_ONLY``: checkpoint blocks go to
     ``spark.local.dir`` (node-local SSD on a real executor; tmpfs in
     the sandbox) instead of the JVM heap. On-heap MEMORY_AND_DISK
     checkpoint blocks become multi-GB long-lived young-gen survivors,
@@ -130,13 +129,9 @@ def ckpt(df, level: str | None = None, eager: bool = True):
     population is first-writer-wins, uncoordinated). Keep eager=True
     where the first consumer is a self-join or a multi-slice union.
     """
-    import os as _os
-
     from pyspark import StorageLevel
 
-    name = level or _os.environ.get("SPARK_GRAFT_CKPT_LEVEL", "DISK_ONLY")
-    return df.localCheckpoint(eager=eager,
-                              storageLevel=getattr(StorageLevel, name))
+    return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.DISK_ONLY)
 
 
 _STAGE_RUN_ROOTS: dict[str, str] = {}

@@ -1,12 +1,18 @@
 """Snapshot table format: versioned parquet tables with MERGE,
 time travel, and optimistic concurrency.
 
-Closes the gap between the plain-directory writer (`materialize.py`)
-and what the reference gets from Neo4j transactions
-(`/root/reference/src/openalex_neo4j/neo4j_client.py:246-252` — MERGE
-upserts inside a transactional store): concurrent writers, snapshot
-isolation for readers, and history. The design is the public
-Iceberg/Delta recipe re-expressed minimally:
+A contract-query table, not a warehouse backend: the ``q_snapshot_merge``
+driver-contract query exercises it, and no warehouse table is written
+through it. Every warehouse table is a plain parquet directory that
+commits through ``materialize._cow_commit``; a ``SnapshotTable``
+directory also holds superseded ``data/<uuid>/`` groups until
+``vacuum``, so readers that list a directory would see stale rows.
+
+It models what the reference gets from Neo4j transactions
+(neo4j_client.py:246-252 — MERGE upserts inside a transactional
+store): concurrent writers, snapshot isolation for readers, and
+history. The design is the public Iceberg/Delta recipe re-expressed
+minimally:
 
 - **Immutable data groups.** Every write lands in a fresh
   ``data/<uuid>/`` parquet directory; nothing is ever modified in

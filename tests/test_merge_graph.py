@@ -230,31 +230,91 @@ def _crash_between_renames(monkeypatch, target):
     monkeypatch.setattr(os, "rename", rename)
 
 
-@pytest.mark.parametrize("crash", [_crash_before_rename,
-                                   _crash_between_renames])
-def test_merge_crash_leaves_old_or_new_table(spark, half_graphs,
-                                             tmp_path_factory, monkeypatch,
-                                             crash):
-    """Kill the copy-on-write commit of the pred-partitioned edges table
-    at each crash point: it reads as exactly the old state with no
-    duplicate rows, and the next merge recovers and commits exactly the
-    new state."""
+def _crash_then_rerun(spark, half_graphs, root, monkeypatch, crash, op):
+    """Write g_a, kill ``op(g_b, root)`` in the commit of the
+    pred-partitioned edges table, check that the edges read as exactly
+    g_a's with no duplicate rows, then re-run ``op``; return g_a's
+    edges, the re-run's counts and the committed edges."""
     g_a, g_b = half_graphs
-    root = str(tmp_path_factory.mktemp("kg_merge_crash"))
     epath = f"{root}/edges"
     write_graph(g_a, root)
     old = _rows(spark.read.parquet(epath))
+    assert set(old) == set(_rows(g_a.edges))
 
     crash(monkeypatch, epath)
     with pytest.raises(RuntimeError, match="killed"):
-        merge_graph(g_b, root)
+        op(g_b, root)
     monkeypatch.undo()
     mat._recover_table(epath)  # what the next merge does first
     got = _rows(spark.read.parquet(epath))
     assert len(got) == len(set(got))
     assert set(got) == set(old)
 
-    counts = merge_graph(g_b, root)
+    counts = op(g_b, root)
     got = _rows(spark.read.parquet(epath))
     assert len(got) == len(set(got)) == counts["edges"]
-    assert set(got) == set(old) | set(_rows(g_b.edges))
+    return old, set(got)
+
+
+CRASHES = [_crash_before_rename, _crash_between_renames]
+
+
+@pytest.mark.parametrize("crash", CRASHES)
+def test_merge_crash_leaves_old_or_new_table(spark, half_graphs,
+                                             tmp_path_factory, monkeypatch,
+                                             crash):
+    """Kill the copy-on-write commit of a merge at each crash point: the
+    table reads as exactly the old state, and the next merge recovers
+    and commits exactly the new state."""
+    old, got = _crash_then_rerun(
+        spark, half_graphs, str(tmp_path_factory.mktemp("kg_merge_crash")),
+        monkeypatch, crash, merge_graph)
+    assert got == set(old) | set(_rows(half_graphs[1].edges))
+
+
+@pytest.mark.parametrize("crash", CRASHES)
+def test_write_crash_leaves_old_or_new_table(spark, half_graphs,
+                                             tmp_path_factory, monkeypatch,
+                                             crash):
+    """A cold import over an existing graph commits each table the same
+    way: killed at each crash point it leaves the previous import's
+    table, and a re-run replaces it with exactly the new graph's."""
+    _, got = _crash_then_rerun(
+        spark, half_graphs, str(tmp_path_factory.mktemp("kg_write_crash")),
+        monkeypatch, crash, write_graph)
+    assert got == set(_rows(half_graphs[1].edges))
+
+
+EDGE_PREDS = {"AUTHORED", "AFFILIATED_WITH", "PUBLISHED_IN", "CITES",
+              "HAS_TOPIC", "FUNDED_BY", "PUBLISHED_BY"}
+
+
+def test_zero_edge_graph_writes_and_merges(spark, tmp_path_factory):
+    """A graph of works with no author, venue, topic, funder or citation
+    has no edges: the empty pred-partitioned edges table still commits
+    and counts 0, the triples hold only property and label rows, and
+    re-merging the same graph writes no table file."""
+    from openalex_neo4j_spark.pipeline import build_graph_from_linked
+    from openalex_neo4j_spark.schemas import MENTION_SCHEMA
+
+    rows = [(f"u{i}", f"Paper {i}", f"paper {i}", f"10.9/{i}", 2020,
+             "journal-article", None, [], [], None, None, None, [], [], [])
+            for i in range(3)]
+    linked = spark.createDataFrame(rows, MENTION_SCHEMA).withColumn(
+        "work_key", F.concat(F.lit("doi:"), F.lower(F.trim("doi"))))
+    g = build_graph_from_linked(linked)
+    root = str(tmp_path_factory.mktemp("kg_zero_edges"))
+
+    assert write_graph(g, root)["edges"] == 0
+    first = merge_graph(g, root)
+    assert first["edges"] == 0
+    assert spark.read.schema(g.edges.schema).parquet(
+        f"{root}/edges").count() == 0
+    triples = _rows(spark.read.parquet(f"{root}/triples"))
+    preds = {p for _, p, _ in triples}
+    assert "label" in preds and preds.isdisjoint(EDGE_PREDS)
+    assert len(triples) == first["triples"]
+
+    before = _data_files(root)
+    assert merge_graph(g, root) == first
+    assert _data_files(root) == before

@@ -1,5 +1,6 @@
 """Physical-plan contract tests: pushdown, pruning, broadcast, and
-Python-stage placement — the 100TB-readiness properties, pinned."""
+Python-stage placement — the 100TB-readiness properties, pinned; plus
+one contract query checked against its DuckDB oracle."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,6 +22,7 @@ from openalex_neo4j_spark.plans import (
 )
 
 SF = "/root/testdata/sf0.01"
+SF_TINY = SF.replace("sf0.01", "sf0.001")
 
 
 def test_filter_reaches_parquet_scan(spark):
@@ -197,3 +199,28 @@ def test_stage_parquet_empty_partitioned_roundtrip(spark):
     out = stage_parquet(empty, "empty_edges", partition_by=["pred"])
     assert out.count() == 0
     assert set(out.columns) == {"subj", "pred", "obj"}
+
+
+def test_q_simhash_matches_duckdb_oracle(spark):
+    """q_simhash against its ORACLE_SQL on DuckDB over the same
+    documents table: row count, column names and order-insensitive
+    value hash, the comparison scripts/check_oracles.py makes."""
+    import duckdb
+
+    from openalex_neo4j_spark.driver_contract import ORACLE_SQL, QUERIES
+    from scripts.check_oracles import value_hash
+
+    df = QUERIES["q_simhash"](spark, SF_TINY)
+    rows = [tuple(r) for r in df.collect()]
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE VIEW documents AS SELECT * FROM "
+                    f"'{SF_TINY}/documents.parquet'")
+        res = con.execute(ORACLE_SQL["q_simhash"])
+        ocols = [d[0] for d in res.description]
+        orows = res.fetchall()
+    finally:
+        con.close()
+    assert rows and len(rows) == len(orows)
+    assert sorted(df.columns) == sorted(ocols)
+    assert value_hash(df.columns, rows) == value_hash(ocols, orows)

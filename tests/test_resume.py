@@ -252,3 +252,27 @@ def test_read_lineage_raises_on_unreadable_lineage(spark, tmp_path):
     with pytest.raises(Exception) as e:
         read_lineage(spark, root).collect()
     assert "parquet" in str(e.value).lower()
+
+
+def test_extract_raises_on_corrupt_mentions_file(spark, pages,
+                                                 tmp_path_factory):
+    """A corrupt part file under <root>/mentions fails the extract
+    instead of being counted as 0 rows (or an empty mention table)."""
+    import os
+
+    root = str(tmp_path_factory.mktemp("resume_corrupt"))
+    pages_df, _ = pages
+    src = str(tmp_path_factory.mktemp("pages_src_corrupt"))
+    pages_df.repartition(2).write.mode("overwrite").parquet(src)
+    stored = spark.read.parquet(src)
+    assert len(stored.inputFiles()) == 2
+    # 2 files round-robin over 4 buckets: bucket 3 gets no file, so the
+    # chunk's dynamic overwrite leaves its directory as it is
+    os.makedirs(f"{root}/mentions/bucket=3")
+    with open(f"{root}/mentions/bucket=3/part-00000.parquet", "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(Exception) as e:
+        resumable_extract(spark, stored, root, run_id="c1",
+                          num_buckets=4, chunk_size=4)
+    assert "parquet" in str(e.value).lower()
+    assert not completed_partitions(spark, root, "extract")

@@ -204,25 +204,6 @@ def test_parity_with_upsert_nodes_semantics(spark, root, tmp_path):
     assert lhs == rhs
 
 
-def test_upsert_nodes_snapshot_backend(spark, tmp_path):
-    """materialize.upsert_nodes(backend='snapshot') has the same
-    last-wins MERGE contract as the plain path, plus history."""
-    from openalex_neo4j_spark.materialize import upsert_nodes
-
-    path = str(tmp_path / "nodes_work")
-    upsert_nodes(spark, path, _df(spark, [("a", 1), ("b", 2)]),
-                 backend="snapshot")
-    got = upsert_nodes(spark, path, _df(spark, [("b", 20), ("c", 3)]),
-                       backend="snapshot")
-    assert {(r["id"], r["val"]) for r in got.collect()} == {
-        ("a", 1), ("b", 20), ("c", 3)}
-    t = SnapshotTable(spark, path, key="id")
-    assert [h["operation"] for h in t.history()] == ["merge", "merge"]
-    # time travel still sees the pre-merge state
-    assert {(r["id"], r["val"]) for r in t.read(version=1).collect()} == {
-        ("a", 1), ("b", 2)}
-
-
 def test_delete_where_keeps_null_predicate_rows(spark, root):
     """SQL DELETE semantics: rows where the predicate is NULL (not
     TRUE) must survive — ~NULL is NULL and a bare negated filter would
@@ -252,49 +233,6 @@ def test_timestamp_key_stats_json_safe(spark, root):
     m = t._load_manifest(t.current_version())
     assert all(isinstance(g["min_key"], (str, type(None)))
                for g in m["groups"])
-
-
-def test_upsert_nodes_snapshot_migrates_plain_table(spark, tmp_path):
-    """Switching backend='plain' -> 'snapshot' on the same path must
-    fold the existing plain table into the initial snapshot instead of
-    silently serving only the new rows."""
-    from openalex_neo4j_spark.materialize import upsert_nodes
-
-    path = str(tmp_path / "nodes")
-    df1 = spark.createDataFrame([("a", 1), ("b", 2)], "id string, val int")
-    upsert_nodes(spark, path, df1)  # plain backend
-    df2 = spark.createDataFrame([("b", 20), ("c", 3)], "id string, val int")
-    got = {r["id"]: r["val"]
-           for r in upsert_nodes(spark, path, df2,
-                                 backend="snapshot").collect()}
-    assert got == {"a": 1, "b": 20, "c": 3}
-
-
-def test_migration_ignores_orphan_snapshot_group_dirs(spark, tmp_path):
-    """A snapshot first-merge that crashed AFTER writing data/<uuid>/
-    group dirs but BEFORE its manifest commit leaves parquet leaves at
-    mixed directory depths under the plain table path. The migration
-    guard must read only the top-level part files — a bare
-    read.parquet(path) raises 'Conflicting directory structures' and
-    wedges the migration until manual cleanup."""
-    import os
-
-    from openalex_neo4j_spark.materialize import upsert_nodes
-
-    path = str(tmp_path / "nodes")
-    df1 = spark.createDataFrame([("a", 1), ("b", 2)], "id string, val int")
-    upsert_nodes(spark, path, df1)  # plain backend
-    # simulate the crashed first-merge: an orphan group dir with a
-    # parquet leaf one level deeper, and no _snapshots manifest
-    orphan = os.path.join(path, "data", "deadbeef")
-    spark.createDataFrame([("zzz", 99)], "id string, val int") \
-        .coalesce(1).write.parquet(orphan)
-    df2 = spark.createDataFrame([("b", 20), ("c", 3)], "id string, val int")
-    got = {r["id"]: r["val"]
-           for r in upsert_nodes(spark, path, df2,
-                                 backend="snapshot").collect()}
-    # orphan rows are unreferenced garbage, NOT part of the table
-    assert got == {"a": 1, "b": 20, "c": 3}
 
 
 def test_clustered_bulk_load_thousand_groups_merge_prunes(spark, root):
