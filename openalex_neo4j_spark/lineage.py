@@ -46,10 +46,25 @@ def read_lineage(spark: SparkSession, root: str) -> DataFrame:
     return spark.createDataFrame([], LINEAGE_SCHEMA) if df is None else df
 
 
-def append_lineage(spark: SparkSession, root: str, rows: list[tuple]) -> None:
-    spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(_lineage_path(root))
+def append_lineage(root: str, rows: list[tuple]) -> None:
+    """Append ``rows`` (``LINEAGE_SCHEMA`` tuples) to the lineage as one
+    new parquet file, written by pyarrow on the driver: a few rows are
+    not worth a Spark job. The file is written under a hidden name
+    (readers skip ``.``-prefixed files) and renamed into place, so a
+    crash mid-append leaves no partial row set."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(
+        [dict(zip(LINEAGE_SCHEMA.names, r)) for r in rows],
+        to_arrow_schema(LINEAGE_SCHEMA))
+    path = _lineage_path(root)
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.snappy.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(table, tmp, compression="snappy", store_schema=False)
+    os.rename(tmp, os.path.join(path, name))
 
 
 def completed_partitions(spark: SparkSession, root: str, stage: str) -> set[int]:
@@ -218,7 +233,7 @@ def resumable_extract(
             F.col("bucket").isin(chunk)).count()
         wall = int((time.time() - t0) * 1000)
         per_bucket_wall = wall // max(len(chunk), 1)
-        append_lineage(spark, root, [
+        append_lineage(root, [
             ("extract", b, None, out_rows, per_bucket_wall, "done", run_id)
             for b in chunk
         ])
@@ -250,7 +265,7 @@ def resumable_stage(
     w.parquet(out)
     result = spark.read.parquet(out)
     n = result.count()
-    append_lineage(spark, root, [
+    append_lineage(root, [
         (stage, -1, None, n, int((time.time() - t0) * 1000), "done", run_id)
     ])
     return result

@@ -278,20 +278,17 @@ def link_mentions(mentions: DataFrame) -> DataFrame:
         # reference's exact-title dict merge. (An earlier revision
         # paid a 3-stage semi/anti-join chain here to drop
         # both-canonical pairs; the filter was provably empty.)
-        # checkpoint: cand feeds cand_tids, the scoring join, and the
-        # year filter -- without this the LSH banding DAG re-executes
+        # checkpoint: cand feeds cand_tids and the scoring join --
+        # without this the LSH banding DAG re-executes
         cand = ckpt(cand, eager=False)
 
         # (4) TF-IDF cosine over candidate title pairs (only longs +
         # doubles move through the scoring shuffles).
-        # ONE reference to the lazily-checkpointed cand plan (explode
-        # of both endpoints), not a union of two selects: the first
-        # consuming job (the eager weights ckpt below) is what
-        # materializes cand, and two references there would both
-        # recompute parts of the band self-join (block population is
-        # first-writer-wins, uncoordinated) and open the
-        # doCheckpoint/getCacheLocs lock-inversion window
-        # (session.ckpt docstring).
+        # ONE reference to cand (explode of both endpoints), not a
+        # union of two selects: under AQE the lazy ckpt above already
+        # ran the band self-join's shuffle stages on this thread, and
+        # its last stage runs in the first consuming job (the weights
+        # ckpt below), where two references would both compute it.
         cand_tids = (
             cand.select(F.explode(F.array("ta", "tb")).alias("tid"))
             .distinct()

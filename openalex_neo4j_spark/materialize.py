@@ -37,15 +37,15 @@ import os
 import shutil
 import time
 import uuid
-from concurrent.futures import ThreadPoolExecutor
-from functools import reduce
 from urllib.parse import unquote, urlparse
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from openalex_neo4j_spark.lineage import append_lineage
 from openalex_neo4j_spark.pipeline import GraphTables
-from openalex_neo4j_spark.session import ckpt, read_parquet_or_none
+from openalex_neo4j_spark.session import (barrier, ckpt, concurrently,
+                                          read_parquet_or_none)
 
 
 def _read_prior(spark: SparkSession, path: str) -> DataFrame | None:
@@ -72,12 +72,20 @@ def _commit_table(staged: str, path: str) -> None:
     """Atomic-enough promote on a posix fs: each rename is atomic, and
     at every intermediate point either ``path`` or a ``.bak`` sibling
     holds the complete previous table (recovered by ``_recover_table``).
-    The Iceberg analog is the snapshot-pointer swap of ``MERGE INTO``."""
+    The Iceberg analog is the snapshot-pointer swap of ``MERGE INTO``.
+
+    Once ``path`` holds the new table, every ``.tmp-*`` and ``.bak-*``
+    sibling of it is garbage: this commit's backup, and whatever a
+    crashed commit left (a staged dir never promoted, a backup never
+    deleted). One writer per table is assumed."""
     bak = f"{path}.bak-{uuid.uuid4().hex[:8]}"
     if os.path.exists(path):
         os.rename(path, bak)
     os.rename(staged, path)
-    shutil.rmtree(bak, ignore_errors=True)
+    parent, name = os.path.split(path)
+    for d in os.listdir(parent or "."):
+        if d.startswith((f"{name}.tmp-", f"{name}.bak-")):
+            shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
 
 
 def _data_files(path: str) -> list[str]:
@@ -98,6 +106,15 @@ def _link_file(src_root: str, dst_root: str, rel: str) -> None:
     for r in (rel, os.path.join(d, f".{name}.crc")):
         if os.path.exists(os.path.join(src_root, r)):
             os.link(os.path.join(src_root, r), os.path.join(dst_root, r))
+
+
+def _footer_rows(path: str) -> int:
+    """Row count of the table at ``path``, summed from its parquet
+    footers on the driver: no Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(os.path.join(path, rel)).num_rows
+               for rel in _data_files(path))
 
 
 def _schema_sig(df: DataFrame) -> list[tuple[str, str]]:
@@ -160,11 +177,11 @@ def _cow_commit(path: str, old: DataFrame | None, final: DataFrame,
         if partition_by:
             w = w.partitionBy(partition_by)
         w.parquet(staged)
+        n_rows = _footer_rows(staged)
         _commit_table(staged, path)
         # the explicit schema reads an empty partitioned table too,
         # which holds no data file to infer one from
-        table = spark.read.schema(final.schema).parquet(path)
-        return table, table.count()
+        return spark.read.schema(final.schema).parquet(path), n_rows
     # the diff feeds two jobs (stats, then the rewrite): keep it in the
     # block store's disk tier instead of grouping twice
     diff = diff.persist(StorageLevel.DISK_ONLY)
@@ -225,34 +242,6 @@ def upsert_nodes(spark: SparkSession, path: str, new_df: DataFrame,
     return _cow_commit(path, old, _last_wins(old, new_df, key))[0]
 
 
-def _materialize(frames: list[DataFrame]) -> None:
-    """Compute every lazily-checkpointed plan in ``frames`` in ONE job
-    before a concurrent fan-out: Spark's RDD checkpoint machinery has a
-    lock-order inversion — RDD.doCheckpoint takes the global
-    RDDCheckpointData$ lock then the RDD's own lock, while the
-    DAGScheduler's getCacheLocs/visit takes the RDD lock then (via
-    RDD.checkpointRDD -> isCheckpointed) the global lock — so two
-    concurrent jobs that share an UNMATERIALIZED localCheckpoint RDD
-    can deadlock the driver (observed in CI: an action thread blocked
-    in RDDCheckpointData.checkpoint against dag-scheduler-event-loop in
-    getCacheLocs, both on the same node table; the suite hung for 35+
-    min on an idle machine). ONE count over a superset-schema union of
-    the frames closes the window: each ckpt RDD is computed exactly
-    once, on this single action thread, and the union branches fill the
-    cores concurrently."""
-    reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
-           frames).count()
-
-
-def _concurrently(fn, calls: dict[str, tuple]) -> dict:
-    """``{name: fn(*args)}``, each call made from its own thread so that
-    their Spark jobs run concurrently (a sequential loop serializes
-    their fixed per-job latency)."""
-    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
-        futs = {name: pool.submit(fn, *args) for name, args in calls.items()}
-        return {name: f.result() for name, f in futs.items()}
-
-
 # edge-derived node counts that a merge recomputes over the merged edges
 _REFRESH_COLS = {"Work": ["cited_by_count"],
                  "Author": ["works_count", "cited_by_count"],
@@ -309,24 +298,25 @@ def merge_graph(g: GraphTables, root: str,
     if with_search_indexes:
         names.append("index_fulltext")
     # every read infers its schema with a Spark job: read them together
-    old = _concurrently(_read_prior, {t: (spark, _table_path(root, t))
-                                      for t in names})
+    old = concurrently(_read_prior, {t: (spark, _table_path(root, t))
+                                     for t in names})
 
     # The final state of every table is checkpointed before any commit:
     # the node refresh, the triples and the fulltext index then read no
-    # file a concurrent commit moves, so all tables commit at once.
+    # file a concurrent commit moves, so all tables commit at once. The
+    # merged edges go first (the refresh reads them), then the node
+    # tables in one concurrent barrier.
     new_e = g.edges.select("subj", "pred", "obj")
-    edges = ckpt((new_e if old["edges"] is None
-                  else old["edges"].select("subj", "pred", "obj")
-                  .unionByName(new_e).dropDuplicates()), eager=False)
+    edges = ckpt(new_e if old["edges"] is None
+                 else old["edges"].select("subj", "pred", "obj")
+                 .unionByName(new_e).dropDuplicates())
     upserted = {label: _last_wins(old[label], df, "id")
                 for label, df in g.nodes.items()}
-    final = enrich_node_counts(  # checkpoints Work eagerly
+    final = enrich_node_counts(  # checkpoints Work itself
         {label: df.drop(*_REFRESH_COLS.get(label, []))
          for label, df in upserted.items()}, edges, linked=None)
-    final = {label: df if label == "Work" else ckpt(df, eager=False)
-             for label, df in final.items()}
-    _materialize([edges, *final.values()])
+    final.update(barrier({label: df for label, df in final.items()
+                          if label != "Work"}))
     final.update(edges=edges, triples=build_triples(final, edges))
     return _commit_graph(root, final, old, with_search_indexes,
                          ("merge", "merge"), t0)
@@ -344,7 +334,8 @@ def _commit_graph(root: str, final: dict[str, DataFrame],
     """Commit every table of a graph (``final``: one frame per node
     label, plus ``edges`` and ``triples``) through ``_cow_commit``, each
     as its own concurrent Spark job, then append the ``lineage`` row
-    (stage, run id); return the row counts. ``old`` maps a table name
+    (stage, run id) with ``lineage.append_lineage`` (no Spark job);
+    return the row counts. ``old`` maps a table name
     to its prior rows (missing: nothing to diff). The fulltext index is
     built from the checkpointed ``Work`` frame in the same batch."""
     if with_search_indexes:
@@ -355,16 +346,11 @@ def _commit_graph(root: str, final: dict[str, DataFrame],
                      "pred" if name in ("edges", "triples") else None)
               for name, df in final.items()}
     counts = {name: n for name, (_, n) in
-              _concurrently(_cow_commit, tables).items()}
-
-    from openalex_neo4j_spark.schemas import LINEAGE_SCHEMA
+              concurrently(_cow_commit, tables).items()}
 
     stage, run_id = lineage
-    wall_ms = int((time.time() - t0) * 1000)
-    final["edges"].sparkSession.createDataFrame(
-        [(stage, -1, None, counts["triples"], wall_ms, "done", run_id)],
-        LINEAGE_SCHEMA,
-    ).write.mode("append").parquet(f"{root}/lineage")
+    append_lineage(root, [(stage, -1, None, counts["triples"],
+                           int((time.time() - t0) * 1000), "done", run_id)])
     return counts
 
 
@@ -382,9 +368,6 @@ def write_graph(g: GraphTables, root: str,
     per query.
     """
     t0 = time.time()
-    # the triples plan references every node table, so the concurrent
-    # commits need the node checkpoints materialized first
-    _materialize(list(g.nodes.values()))
     return _commit_graph(root, {**g.nodes, "edges": g.edges,
                                 "triples": g.triples},
                          {}, with_search_indexes, ("materialize", "write"), t0)

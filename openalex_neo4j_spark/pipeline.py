@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from openalex_neo4j_spark.extract import mentions_from_pages
 from openalex_neo4j_spark.linking import link_mentions
-from openalex_neo4j_spark.session import ckpt, stage_parquet
+from openalex_neo4j_spark.session import barrier, ckpt, stage_parquet
 
 
 def camel_label_expr(col):
@@ -470,50 +470,35 @@ def build_graph_from_linked(linked: DataFrame,
             work_embedding_text(nodes["Work"]), "_embed_text",
             model_name=embedding_model,
         ).drop("_embed_text")
-    # materialization barriers: edges and the enriched node tables are
-    # each consumed by several downstream plans (count enrichment,
-    # property triples, writes, search). Without the checkpoint, each
-    # consumer re-executes the full upstream DAG — including the
-    # work_nodes window dedup over all mentions — once per use (the
-    # column-pruned subtrees differ per consumer, so Catalyst's
+    # Materialization barriers: edges and the enriched node tables each
+    # feed several plans (count enrichment, property triples, writes,
+    # search). Without one, every consumer re-executes the upstream DAG
+    # once per use (the column-pruned subtrees differ per consumer, so
     # ReuseExchange cannot dedupe them). Node/edge tables are tiny
-    # relative to the mention corpus, so the barrier cost is O(output).
+    # relative to the mention corpus, so a barrier costs O(output).
+    # Under AQE a lazy localCheckpoint runs all shuffle stages beneath
+    # it on the calling thread anyway, so a lazy barrier only saves
+    # its last-stage job, and only when one consumer on this thread
+    # comes first.
     #
-    # Work is checkpointed FIRST: the CITES endpoint semi-join, its own
-    # count enrichment, and the Author citation rollup all reference it
-    # — unmaterialized, the mention-table window dedup would execute
-    # 3-4x. The 7 enriched checkpoints are mutually independent, so
-    # they are submitted concurrently (a sequential loop serializes 7
-    # driver-blocking actions of fixed scheduler latency each — pure
-    # Amdahl in the N-vs-4N scaling bench; the scheduler interleaves
-    # the concurrent jobs across whatever cores exist).
+    # Work first: the CITES endpoint semi-join, its count enrichment
+    # and the Author citation rollup all reference it. Lazy: the edge
+    # stage below is its first consumer.
     nodes["Work"] = ckpt(nodes["Work"], eager=False)
     # edges: COLUMNAR stage partitioned by pred, not row-block ckpt —
     # the table is re-read by 5+ consumers (four enrichment slices,
     # the triples union, writes), each needing one pred slice and 1-2
-    # of the 3 columns. Row blocks forced every consumer through full
-    # rows of the whole table; the pred-partitioned parquet gives
-    # partition pruning + column pruning + dictionary compression of
-    # the heavily repeated id strings. Branches carry constant preds,
-    # so each writer task lands in exactly one partition dir — the
-    # partitioned write adds no shuffle.
+    # of the 3 columns. Branches carry constant preds, so each writer
+    # task lands in exactly one partition dir (no extra shuffle).
     edges = stage_parquet(build_edges(linked, nodes["Work"]), "edges",
                           partition_by=["pred"]).select(
         "subj", "pred", "obj")
-    # enrich_node_counts checkpoints the enriched Work table eagerly
-    # BEFORE the Author rollup references it — a checkpoint applied by
-    # this caller after the fact cannot rewrite the plan the rollup
-    # already captured, so the CITES in-degree aggregation would
-    # re-run once per downstream consumer (event-log evidence: the
-    # edge scan appeared 5x when the enriched tables fanned out
-    # unmaterialized). The remaining six enriched tables are mutually
-    # independent: lazy ckpt (truncates the plan immediately, submits
-    # no job), materialized concurrently by the triples job's union
-    # branches.
+    # enrich_node_counts checkpoints the enriched Work itself, before
+    # the Author rollup captures it; the other six enriched tables are
+    # independent of each other: one concurrent barrier.
     nodes = enrich_node_counts(nodes, edges, linked)
-    for label in nodes:
-        if label != "Work":
-            nodes[label] = ckpt(nodes[label], eager=False)
+    nodes.update(barrier({label: df for label, df in nodes.items()
+                          if label != "Work"}))
     triples = build_triples(nodes, edges)
     return GraphTables(nodes=nodes, edges=edges, triples=triples,
                        mentions=linked)

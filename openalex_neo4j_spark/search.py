@@ -220,13 +220,16 @@ def build_fulltext_index(df: DataFrame, id_col: str = "id",
     weight = tf * idf with idf = ln((N+1)/(df+1)) + 1."""
     toks = _doc_tokens(df, id_col, text_col)
     tf = toks.groupBy("id", "tok").agg(F.count("*").alias("tf"))
-    n_docs = df.count()
+    # N as a scalar subquery, not a driver-side count: building the
+    # index submits no job, and N is computed inside the query that
+    # consumes it
+    n_docs = df.select(F.count("*").cast("double")).scalar()
     dfreq = tf.groupBy("tok").agg(F.countDistinct("id").alias("df"))
     return (
         tf.join(dfreq, "tok")
         .select(
             "tok", "id",
-            (F.col("tf") * (F.log(F.lit(float(n_docs + 1))
+            (F.col("tf") * (F.log((n_docs + 1.0)
                                   / (F.col("df") + 1)) + 1.0)).alias("weight"),
         )
     )

@@ -104,7 +104,7 @@ def read_parquet_or_none(spark: SparkSession, path: str):
 
 
 def ckpt(df, eager: bool = True):
-    """Eager lineage-truncating checkpoint for LARGE intermediates.
+    """Lineage-truncating ``localCheckpoint`` for LARGE intermediates.
 
     Storage level is ``DISK_ONLY``: checkpoint blocks go to
     ``spark.local.dir`` (node-local SSD on a real executor; tmpfs in
@@ -120,18 +120,43 @@ def ckpt(df, eager: bool = True):
     plain ``localCheckpoint()`` — per-iteration disk round-trips cost
     more than their GC footprint.
 
-    ``eager=False`` truncates the plan immediately (the logical plan
-    becomes a LogicalRDD leaf either way) but folds materialization
-    into the first consuming job — one driver-blocking action saved
-    per call site. Lazy is ONLY safe when the first consuming job
-    references the plan once: concurrent first-materialization of a
-    multiply-referenced lazy checkpoint duplicates the compute (block
-    population is first-writer-wins, uncoordinated). Keep eager=True
-    where the first consumer is a self-join or a multi-slice union.
+    ``eager=False`` does not defer the work: under AQE a lazy
+    ``localCheckpoint`` runs every shuffle stage beneath it on the
+    calling thread, and only the final stage waits for the first
+    consuming job. That saves one job when the first consumer runs on
+    the same thread and references the plan once; the checkpoint stays
+    unmaterialized until then, so concurrent jobs must not share it
+    (see ``barrier``).
     """
     from pyspark import StorageLevel
 
     return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.DISK_ONLY)
+
+
+def concurrently(fn, calls: dict[str, tuple]) -> dict:
+    """``{name: fn(*args)}``, each call made from its own thread so that
+    their Spark jobs run concurrently (a sequential loop serializes
+    their fixed per-job latency)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=max(len(calls), 1)) as pool:
+        futs = {name: pool.submit(fn, *args) for name, args in calls.items()}
+        return {name: f.result() for name, f in futs.items()}
+
+
+def barrier(frames: dict) -> dict:
+    """``{name: ckpt(df)}``: materialize every frame now, each by an
+    eager DISK_ONLY checkpoint, all submitted concurrently so their
+    jobs share the cores instead of queueing behind one another.
+
+    The frames must not depend on each other, and every checkpoint
+    beneath them must already be materialized (eager, or computed by
+    an earlier job). Concurrent jobs that share an UNMATERIALIZED
+    checkpoint can deadlock the driver: RDDCheckpointData marks an RDD
+    checkpointed under its global lock and then takes the RDD's lock,
+    while the DAGScheduler takes the RDD's lock and then the global
+    one."""
+    return concurrently(ckpt, {name: (df,) for name, df in frames.items()})
 
 
 _STAGE_RUN_ROOTS: dict[str, str] = {}

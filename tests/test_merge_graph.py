@@ -253,7 +253,14 @@ def _crash_then_rerun(spark, half_graphs, root, monkeypatch, crash, op):
     counts = op(g_b, root)
     got = _rows(spark.read.parquet(epath))
     assert len(got) == len(set(got)) == counts["edges"]
+    assert not _leftovers(root, "edges")
     return old, set(got)
+
+
+def _leftovers(root: str, table: str) -> list[str]:
+    """Staged (``.tmp-*``) and backup (``.bak-*``) siblings of a table."""
+    return [d for d in os.listdir(root)
+            if d.startswith((f"{table}.tmp-", f"{table}.bak-"))]
 
 
 CRASHES = [_crash_before_rename, _crash_between_renames]
@@ -283,6 +290,30 @@ def test_write_crash_leaves_old_or_new_table(spark, half_graphs,
         spark, half_graphs, str(tmp_path_factory.mktemp("kg_write_crash")),
         monkeypatch, crash, write_graph)
     assert got == set(_rows(half_graphs[1].edges))
+
+
+@pytest.mark.parametrize("crash", CRASHES)
+def test_write_rerun_after_crash_needs_no_recovery(spark, half_graphs,
+                                                   tmp_path_factory,
+                                                   monkeypatch, crash):
+    """A cold import re-run straight after a crashed one (no recovery
+    step in between) commits exactly the new graph and removes what
+    the crashed commit left beside the table."""
+    g_a, g_b = half_graphs
+    root = str(tmp_path_factory.mktemp("kg_write_rerun"))
+    epath = f"{root}/edges"
+    write_graph(g_a, root)
+    crash(monkeypatch, epath)
+    with pytest.raises(RuntimeError, match="killed"):
+        write_graph(g_b, root)
+    monkeypatch.undo()
+    assert _leftovers(root, "edges")
+
+    counts = write_graph(g_b, root)
+    got = _rows(spark.read.parquet(epath))
+    assert len(got) == len(set(got)) == counts["edges"]
+    assert set(got) == set(_rows(g_b.edges))
+    assert not _leftovers(root, "edges")
 
 
 EDGE_PREDS = {"AUTHORED", "AFFILIATED_WITH", "PUBLISHED_IN", "CITES",

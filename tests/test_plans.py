@@ -224,3 +224,62 @@ def test_q_simhash_matches_duckdb_oracle(spark):
     assert rows and len(rows) == len(orows)
     assert sorted(df.columns) == sorted(ocols)
     assert value_hash(df.columns, rows) == value_hash(ocols, orows)
+
+
+def _last_job_id(spark) -> int:
+    """Id of the newest job in the driver's status store, after the
+    listener has processed every event (perfbench/spans.py recipe)."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
+# Spark jobs one build_graph + write_graph of build_world(30, seed=5)
+# submits on local[8] with 8 shuffle partitions: each AQE shuffle
+# stage, barrier, table write and driver collect is one job.
+BUILD_AND_WRITE_JOBS = 64
+
+
+def test_build_and_write_job_budget(spark, tmp_path):
+    """The build and the cold import submit no more Spark jobs than
+    this budget: each job is a driver-serial round trip of fixed
+    scheduling cost, which at small scale is most of the wall."""
+    from openalex_neo4j_spark.corpus import build_world, pages_dataframe
+    from openalex_neo4j_spark.materialize import write_graph
+    from openalex_neo4j_spark.pipeline import build_graph
+
+    pages = pages_dataframe(spark, build_world(30, seed=5), num_partitions=4)
+    before = _last_job_id(spark)
+    counts = write_graph(build_graph(pages), str(tmp_path / "kg"))
+    jobs = _last_job_id(spark) - before
+    assert counts["triples"] > 0
+    assert jobs <= BUILD_AND_WRITE_JOBS, (
+        f"{jobs} jobs > budget {BUILD_AND_WRITE_JOBS}")
+
+
+def test_barrier_on_shared_parent_does_not_deadlock(spark):
+    """Frames that all join one checkpointed parent, checkpointed by
+    one concurrent barrier: the barrier returns (a lock-order inversion
+    in Spark's checkpoint code can hang concurrent first uses of a
+    shared checkpoint) and the frames keep their rows."""
+    import threading
+
+    from openalex_neo4j_spark.session import barrier
+
+    parent = barrier({"p": spark.range(3000).selectExpr(
+        "id", "id % 11 AS k")})["p"]
+    frames = {f"f{i}": spark.range(800).selectExpr(f"id * {i + 1} AS id")
+              .join(parent, "id").groupBy("k").count()
+              for i in range(6)}
+    out = {}
+    t = threading.Thread(target=lambda: out.update(barrier(frames)),
+                         daemon=True)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "barrier did not return"
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+    assert {n: rows(df) for n, df in out.items()} == {
+        n: rows(df) for n, df in frames.items()}

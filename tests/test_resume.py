@@ -9,10 +9,12 @@ from pyspark.sql import functions as F
 
 from openalex_neo4j_spark.corpus import build_world, pages_dataframe
 from openalex_neo4j_spark.lineage import (
+    append_lineage,
     build_graph_resumable,
     completed_partitions,
     read_lineage,
     resumable_extract,
+    stage_done,
 )
 from openalex_neo4j_spark.oracle import oracle_triples, precision_recall
 
@@ -276,3 +278,33 @@ def test_extract_raises_on_corrupt_mentions_file(spark, pages,
                           num_buckets=4, chunk_size=4)
     assert "parquet" in str(e.value).lower()
     assert not completed_partitions(spark, root, "extract")
+
+
+def test_lineage_reads_spark_and_pyarrow_rows(spark, tmp_path):
+    """A lineage dir holding a Spark-written file and files appended by
+    append_lineage (pyarrow) reads as one table, and stage_done sees
+    the stages of both writers."""
+    import os
+
+    from openalex_neo4j_spark.schemas import LINEAGE_SCHEMA
+
+    root = str(tmp_path)
+    spark.createDataFrame(
+        [("link", -1, None, 10, 5, "done", "r1")], LINEAGE_SCHEMA
+    ).write.mode("append").parquet(f"{root}/lineage")
+    append_lineage(root, [("extract", 0, None, 3, 1, "done", "r2"),
+                          ("extract", 1, 7, 4, 2, "done", "r2")])
+    append_lineage(root, [("materialize", -1, None, 42, 9, "done", "r2")])
+
+    assert not [f for f in os.listdir(f"{root}/lineage")
+                if f.endswith(".tmp")]
+    got = sorted(tuple(r) for r in read_lineage(spark, root).collect())
+    assert got == sorted([
+        ("link", -1, None, 10, 5, "done", "r1"),
+        ("extract", 0, None, 3, 1, "done", "r2"),
+        ("extract", 1, 7, 4, 2, "done", "r2"),
+        ("materialize", -1, None, 42, 9, "done", "r2")])
+    assert stage_done(spark, root, "link")
+    assert stage_done(spark, root, "materialize")
+    assert not stage_done(spark, root, "extract")
+    assert completed_partitions(spark, root, "extract") == {0, 1}
