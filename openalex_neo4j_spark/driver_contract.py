@@ -44,17 +44,18 @@ def _spread(df: DataFrame, *by: str) -> DataFrame:
     # A parquet file cannot be split below a row group, so the true
     # max scan parallelism is the ROW-GROUP count, not the split count
     # (the split count reported 32 for a 6-row-group file and hid the
-    # starvation). Footer reads are driver-local and milliseconds; any
-    # non-local / unreadable layout leaves the frame untouched.
+    # starvation). Footer reads are driver-local and milliseconds; a
+    # non-local layout (any scheme but file:) leaves the frame
+    # untouched, and a local footer that cannot be read raises.
+    from urllib.parse import unquote, urlparse
+
     import pyarrow.parquet as pq
+    uris = [urlparse(f) for f in files]
+    if any(u.scheme not in ("", "file") for u in uris):
+        return df
     n_groups = 0
-    for f in files:
-        p = f[7:] if f.startswith("file://") else (
-            f[5:] if f.startswith("file:") else f)
-        try:
-            n_groups += pq.ParquetFile(p).metadata.num_row_groups
-        except Exception:
-            return df
+    for u in uris:
+        n_groups += pq.ParquetFile(unquote(u.path)).metadata.num_row_groups
         if n_groups >= target:
             return df
     return df.repartition(target, *by) if by else df.repartition(target)
@@ -808,7 +809,9 @@ def kg_top_cited(spark, sf):
     DuckDB from the plain-Python oracle triple table. Reads the shared
     build-once materialization (_kg_graph_root) instead of rebuilding
     the 150-work graph per invocation."""
-    work = spark.read.parquet(f"{_kg_graph_root(spark)}/nodes_work")
+    from openalex_neo4j_spark.materialize import read_graph
+
+    work = read_graph(spark, _kg_graph_root(spark), ("Work",))["Work"]
     return (
         work
         .select("id", F.col("cited_by_count").cast("long")
@@ -818,14 +821,16 @@ def kg_top_cited(spark, sf):
     )
 
 
-def _kg_graph_root(spark, n_works: int = 150) -> str:
+def _kg_graph_root(spark, n_works: int = 150, search: bool = False) -> str:
     """Build-once graph tables for the README graph-query surface
     (README.md:330-357): the graph at (n_works, seed 42) is
     materialized to /tmp parquet on first use and read back afterwards
     — the query contract functions below are *queries over a built
     graph*, not re-runs of the build. Shared by kg_triples /
     kg_top_cited / kg_collaborators / kg_institution_works /
-    kg_cocited_pairs (one build instead of one per query)."""
+    kg_cocited_pairs (one build instead of one per query), and, with
+    ``search`` (work embeddings + the fulltext index), by
+    kg_hybrid_search."""
     import os
 
     from openalex_neo4j_spark.corpus import build_world, pages_dataframe
@@ -833,7 +838,8 @@ def _kg_graph_root(spark, n_works: int = 150) -> str:
     from openalex_neo4j_spark.materialize import write_graph
     from openalex_neo4j_spark.pipeline import build_graph
 
-    root = f"/tmp/spark_graft_kg_edges_w{n_works}_s42_{KG_CACHE_VERSION}"
+    kind = "search" if search else "edges"
+    root = f"/tmp/spark_graft_kg_{kind}_w{n_works}_s42_{KG_CACHE_VERSION}"
     # cache validity is gated on an explicit completion marker, not
     # bare directory existence: a crashed/concurrent prior build leaves
     # a partial parquet dir that os.path.exists would accept, silently
@@ -895,7 +901,9 @@ def _kg_graph_root(spark, n_works: int = 150) -> str:
             shutil.rmtree(root, ignore_errors=True)
             tmp = f"{root}.build_{_uuid.uuid4().hex[:8]}"
             world = build_world(n_works, seed=42)
-            write_graph(build_graph(pages_dataframe(spark, world)), tmp)
+            write_graph(build_graph(pages_dataframe(spark, world),
+                                    generate_embeddings=search),
+                        tmp, with_search_indexes=search)
             open(f"{tmp}/_GRAFT_COMPLETE", "w").close()
             os.rename(tmp, root)
     finally:
@@ -967,39 +975,19 @@ def kg_cocited_pairs(spark, sf):
 
 def kg_hybrid_search(spark, sf):
     """Import-then-search split: the graph, work embeddings (M4), and
-    the fulltext index (D2) are materialized ONCE to a warehouse dir;
-    the query path reads the stored tables — no per-query index
-    rebuild or re-encoding (reference indexes are import-time DDL,
-    neo4j_client.py:134-144, 191-207)."""
-    import os
-
-    from openalex_neo4j_spark.corpus import build_world, pages_dataframe
-    from openalex_neo4j_spark.materialize import write_graph
-    from openalex_neo4j_spark.pipeline import build_graph
+    the fulltext index (D2) are materialized ONCE to a warehouse dir
+    (_kg_graph_root); the query path reads the stored tables — no
+    per-query index rebuild or re-encoding (reference indexes are
+    import-time DDL, neo4j_client.py:134-144, 191-207)."""
+    from openalex_neo4j_spark.corpus import build_world
+    from openalex_neo4j_spark.materialize import read_graph
     from openalex_neo4j_spark.search import hybrid_search
 
-    from openalex_neo4j_spark.kg_oracle import KG_CACHE_VERSION
-
-    world = build_world(100, seed=42)
-    root = f"/tmp/spark_graft_hybrid_w100_s42_{KG_CACHE_VERSION}"
-    # completion-marker gate (see _kg_edges_cached): never trust a
-    # bare directory left by a crashed prior write
-    if not os.path.exists(f"{root}/_GRAFT_COMPLETE"):
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
-        g = build_graph(pages_dataframe(spark, world),
-                        generate_embeddings=True)
-        write_graph(g, root, with_search_indexes=True)
-        open(f"{root}/_GRAFT_COMPLETE", "w").close()
-    nodes = {
-        label: spark.read.parquet(f"{root}/nodes_{label.lower()}")
-        for label in ("Work", "Author", "Institution", "Source",
-                      "Topic", "Publisher", "Funder")
-    }
-    edges = spark.read.parquet(f"{root}/edges")
-    index = spark.read.parquet(f"{root}/index_fulltext")
-    w = next(w for w in world.works.values() if w.has_canonical)
-    return hybrid_search(w.title, nodes, edges, limit=5, index=index,
+    g = read_graph(spark, _kg_graph_root(spark, 100, search=True))
+    w = next(w for w in build_world(100, seed=42).works.values()
+             if w.has_canonical)
+    return hybrid_search(w.title, g, g["edges"], limit=5,
+                         index=g["index_fulltext"],
                          score_round=6).select("id", "score", "title")
 
 

@@ -26,10 +26,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from openalex_neo4j_spark.extract import mentions_from_pages
-from openalex_neo4j_spark.linking import link_mentions
-from openalex_neo4j_spark.pipeline import GraphTables, build_graph_from_linked
+from openalex_neo4j_spark.pipeline import (GraphTables, build_graph_from_linked,
+                                           link_pages)
 from openalex_neo4j_spark.search import build_fulltext_index, fulltext_topk
+from openalex_neo4j_spark.session import stage_parquet
 
 
 def seed_work_keys(linked: DataFrame, query: str, limit: int) -> DataFrame:
@@ -96,15 +96,11 @@ def import_from_query(
     expand_depth: int = 1,
     skip_abstracts: bool = False,
 ) -> GraphTables:
-    """Full reference-parity import flow (importer.py:36-98)."""
-    mentions = mentions_from_pages(pages).localCheckpoint()
-    linked = link_mentions(mentions).localCheckpoint()
-
+    """Full reference-parity import flow (importer.py:36-98), over
+    ``build_graph``'s own stages."""
+    linked = link_pages(pages)
     seeds = seed_work_keys(linked, query, limit)
     collected = expand_frontier(linked, seeds, expand_depth)
-
-    subset = linked.join(collected, "work_key", "left_semi")
-    if skip_abstracts:
-        # P10 (importer.py:73-77): null out abstracts before import
-        subset = subset.withColumn("abstract", F.lit(None).cast("string"))
-    return build_graph_from_linked(subset.localCheckpoint())
+    subset = stage_parquet(linked.join(collected, "work_key", "left_semi"),
+                           "subset")
+    return build_graph_from_linked(subset, skip_abstracts=skip_abstracts)

@@ -1,19 +1,24 @@
-"""Per-partition lineage + resumable stage execution (north rule).
+"""Per-partition lineage + resumable build (north rule).
 
 Every stage writes lineage rows ``(stage, partition_id, input_rows,
 output_rows, wall_ms, status, run_id)`` to ``<root>/lineage`` as it
-commits output, so a killed run resumes without recomputing completed
-partitions:
+commits output, so a killed ``build_graph_resumable`` resumes without
+recomputing completed work. Its stages:
 
-- the **extract** stage processes the input in ``num_buckets`` stable
-  hash buckets (``pmod(hash(url), num_buckets)``), committing
+- **extract** processes the input in ``num_buckets`` stable buckets
+  (whole input files, or ``pmod(hash(url), num_buckets)``), committing
   ``chunk_size`` buckets at a time via dynamic partition overwrite +
   a lineage append. Kill the run between chunk commits and the next
   run only processes the missing buckets.
-- **link** / **materialize** are global stages (entity linking is a
-  corpus-wide fixpoint) and resume at stage granularity: when their
-  output and ``status=done`` lineage row exist, they're read back
-  instead of recomputed.
+- **link** is global (entity linking is a corpus-wide fixpoint): the
+  linked table commits atomically to ``<root>/linked``, then its
+  lineage row is appended; a resumed run reads it back.
+- **materialize** is ``materialize.write_graph`` over
+  ``pipeline.build_graph_from_linked``: the assembly and commit every
+  other build uses, so the resumable warehouse is read and merged like
+  any other. ``write_graph`` appends the stage's row after every table
+  has committed; until then a re-run rebuilds the graph from the
+  committed linked table.
 
 This is the analog of the reference's idempotent ``MERGE`` re-import
 (neo4j_client.py:246-252, tests/integration/test_neo4j_integration.py:
@@ -244,87 +249,34 @@ def resumable_extract(
     return written.drop("bucket")
 
 
-def resumable_stage(
-    spark: SparkSession,
-    root: str,
-    stage: str,
-    out_name: str,
-    compute,  # () -> DataFrame
-    run_id: str,
-    partition_by: list[str] | None = None,
-) -> DataFrame:
-    """Global (stage-granular) resumable step: skip when already done."""
-    out = f"{root}/{out_name}"
-    if stage_done(spark, root, stage):
-        return spark.read.parquet(out)
-    t0 = time.time()
-    df = compute()
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(out)
-    result = spark.read.parquet(out)
-    n = result.count()
-    append_lineage(root, [
-        (stage, -1, None, n, int((time.time() - t0) * 1000), "done", run_id)
-    ])
-    return result
-
-
 def build_graph_resumable(
     spark: SparkSession,
     pages: DataFrame,
     root: str,
     num_buckets: int = 32,
     chunk_size: int = 8,
-) -> dict[str, DataFrame]:
-    """Full resumable pipeline; returns the materialized tables."""
+) -> dict[str, DataFrame | None]:
+    """Extract, link and materialize the graph of ``pages`` under
+    ``root``, skipping every stage a previous run completed; returns the
+    committed tables (``materialize.read_graph``) plus ``lineage``."""
+    # imported here: materialize imports this module
     from openalex_neo4j_spark.linking import link_mentions
-    from openalex_neo4j_spark.pipeline import (GraphTables, _named_nodes,
-                                               author_nodes, build_edges,
-                                               build_triples,
-                                               enrich_node_counts,
-                                               institution_nodes,
-                                               publisher_nodes, source_nodes,
-                                               work_nodes)
+    from openalex_neo4j_spark.materialize import (_cow_commit, read_graph,
+                                                  write_graph)
+    from openalex_neo4j_spark.pipeline import build_graph_from_linked
 
     run_id = uuid.uuid4().hex[:12]
     mentions = resumable_extract(spark, pages, root, run_id,
                                  num_buckets, chunk_size)
-    linked = resumable_stage(
-        spark, root, "link", "linked",
-        lambda: link_mentions(mentions), run_id,
-    )
-    nodes = {
-        "Work": work_nodes(linked), "Author": author_nodes(linked),
-        "Institution": institution_nodes(linked),
-        "Source": source_nodes(linked),
-        "Topic": _named_nodes(linked, "topics", "topic"),
-        "Funder": _named_nodes(linked, "funders", "funder"),
-        "Publisher": publisher_nodes(linked),
-    }
-    # edges first (they only need the raw Work ids), then the node
-    # tables enriched with edge-derived counts (works_count /
-    # cited_by_count), then triples over the stored tables
-    edges = resumable_stage(
-        spark, root, "edges", "edges",
-        lambda: build_edges(linked, nodes["Work"]), run_id,
-        partition_by=["pred"],
-    )
-    nodes = enrich_node_counts(nodes, edges, linked)
-    out: dict[str, DataFrame] = {}
-    for label, df in nodes.items():
-        out[f"nodes_{label.lower()}"] = resumable_stage(
-            spark, root, f"nodes_{label.lower()}",
-            f"nodes_{label.lower()}", lambda df=df: df, run_id,
-        )
-    node_map = {label: out[f"nodes_{label.lower()}"] for label in nodes}
-    triples = resumable_stage(
-        spark, root, "triples", "triples",
-        lambda: build_triples(node_map, edges), run_id,
-        partition_by=["pred"],
-    )
-    out["edges"] = edges
-    out["triples"] = triples
-    out["lineage"] = read_lineage(spark, root)
-    return out
+    if stage_done(spark, root, "link"):
+        linked = spark.read.parquet(f"{root}/linked")
+    else:
+        t0 = time.time()
+        linked, n = _cow_commit(f"{root}/linked", None,
+                                link_mentions(mentions))
+        append_lineage(root, [("link", -1, None, n,
+                               int((time.time() - t0) * 1000), "done",
+                               run_id)])
+    if not stage_done(spark, root, "materialize"):
+        write_graph(build_graph_from_linked(linked), root)
+    return {**read_graph(spark, root), "lineage": read_lineage(spark, root)}

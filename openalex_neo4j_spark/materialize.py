@@ -298,7 +298,7 @@ def merge_graph(g: GraphTables, root: str,
     if with_search_indexes:
         names.append("index_fulltext")
     # every read infers its schema with a Spark job: read them together
-    old = concurrently(_read_prior, {t: (spark, _table_path(root, t))
+    old = concurrently(_read_prior, {t: (spark, table_path(root, t))
                                      for t in names})
 
     # The final state of every table is checkpointed before any commit:
@@ -322,10 +322,32 @@ def merge_graph(g: GraphTables, root: str,
                          ("merge", "merge"), t0)
 
 
-def _table_path(root: str, name: str) -> str:
+GRAPH_TABLES = ("Work", "Author", "Institution", "Source", "Topic", "Funder",
+                "Publisher", "edges", "triples", "index_fulltext")
+
+
+def table_path(root: str, name: str) -> str:
+    """Where the table ``name`` (a node label, ``edges``, ``triples`` or
+    ``index_fulltext``) of the graph at ``root`` lives."""
     if name in ("edges", "triples", "index_fulltext"):
         return f"{root}/{name}"
     return f"{root}/nodes_{name.lower()}"
+
+
+def read_graph(spark: SparkSession, root: str,
+               names: tuple[str, ...] = GRAPH_TABLES
+               ) -> dict[str, DataFrame | None]:
+    """The committed tables of the graph at ``root``, by name (see
+    ``table_path``), read concurrently: each read infers its schema with
+    a Spark job. ``index_fulltext`` is None for a graph written without
+    search indexes; an index that exists but cannot be read raises."""
+    def read(name: str) -> DataFrame | None:
+        path = table_path(root, name)
+        if name == "index_fulltext":
+            return read_parquet_or_none(spark, path)
+        return spark.read.parquet(path)
+
+    return concurrently(read, {name: (name,) for name in names})
 
 
 def _commit_graph(root: str, final: dict[str, DataFrame],
@@ -342,7 +364,7 @@ def _commit_graph(root: str, final: dict[str, DataFrame],
         from openalex_neo4j_spark.search import work_fulltext_index
 
         final = {**final, "index_fulltext": work_fulltext_index(final["Work"])}
-    tables = {name: (_table_path(root, name), old.get(name), df,
+    tables = {name: (table_path(root, name), old.get(name), df,
                      "pred" if name in ("edges", "triples") else None)
               for name, df in final.items()}
     counts = {name: n for name, (_, n) in

@@ -423,31 +423,41 @@ def build_triples(nodes: dict[str, DataFrame], edges: DataFrame) -> DataFrame:
     return out
 
 
-def build_graph(pages: DataFrame, skip_abstracts: bool = False,
-                generate_embeddings: bool = False,
-                embedding_model: str | None = None) -> GraphTables:
+def link_pages(pages: DataFrame) -> DataFrame:
+    """pages -> mentions -> linked mentions: the one place that decides
+    how both are materialized."""
     # mentions: row-block checkpoint — only 2 consumers (a 3-column
     # aggregation + the final full-row join), and a parquet encode of
     # the text-heavy mention rows costs more JVM CPU + row-group GC
     # than both consumers save (measured: extract stage 46s -> 105s
     # when staged). The LINKED table is the opposite case: it fans out
     # to 7 node builders + edges, each needing a different column
-    # slice, so it goes through stage_parquet below and every consumer
+    # slice, so it goes through stage_parquet and every consumer
     # column-prunes its scan (a single assembly stage read 6.8GB of
     # row blocks for plans that needed ~1GB of columns).
     mentions = ckpt(mentions_from_pages(pages), eager=False)
-    linked = link_mentions(mentions)
-    if skip_abstracts:
-        # P10 (importer.py:73-77): drop abstracts behind a config flag
-        linked = linked.withColumn("abstract", F.lit(None).cast("string"))
-    return build_graph_from_linked(stage_parquet(linked, "linked"),
+    return stage_parquet(link_mentions(mentions), "linked")
+
+
+def build_graph(pages: DataFrame, skip_abstracts: bool = False,
+                generate_embeddings: bool = False,
+                embedding_model: str | None = None) -> GraphTables:
+    return build_graph_from_linked(link_pages(pages),
+                                   skip_abstracts=skip_abstracts,
                                    generate_embeddings=generate_embeddings,
                                    embedding_model=embedding_model)
 
 
 def build_graph_from_linked(linked: DataFrame,
                             generate_embeddings: bool = False,
-                            embedding_model: str | None = None) -> GraphTables:
+                            embedding_model: str | None = None,
+                            skip_abstracts: bool = False) -> GraphTables:
+    """Node, edge and triple tables over linked mentions: the one
+    assembly every build path (``build_graph``, the query-seeded import,
+    the resumable build) runs."""
+    if skip_abstracts:
+        # P10 (importer.py:73-77): drop abstracts behind a config flag
+        linked = linked.withColumn("abstract", F.lit(None).cast("string"))
     nodes = {
         "Work": work_nodes(linked),
         "Author": author_nodes(linked),

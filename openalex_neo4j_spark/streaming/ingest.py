@@ -29,7 +29,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from openalex_neo4j_spark.schemas import LINEAGE_SCHEMA, PAGES_SCHEMA
+from openalex_neo4j_spark.lineage import append_lineage
+from openalex_neo4j_spark.schemas import PAGES_SCHEMA
 
 
 def pages_stream(spark: SparkSession, pages_dir: str,
@@ -142,13 +143,10 @@ def stream_ingest_mentions(
         # lineage stays append-mode: a replayed epoch may record a
         # second bookkeeping row (observability only, deduped by
         # epoch id on read); the DATA partition above is exactly-once.
-        spark.createDataFrame(
-            [(
-                "stream_ingest", int(epoch_id), n_in, n_out,
-                int((time.time() - t0) * 1000), "done", f"epoch-{epoch_id}",
-            )],
-            LINEAGE_SCHEMA,
-        ).coalesce(1).write.mode("append").parquet(f"{out_root}/lineage")
+        append_lineage(out_root, [(
+            "stream_ingest", int(epoch_id), n_in, n_out,
+            int((time.time() - t0) * 1000), "done", f"epoch-{epoch_id}",
+        )])
 
     stream = pages_stream(spark, pages_dir,
                           max_files_per_trigger=max_files_per_trigger)

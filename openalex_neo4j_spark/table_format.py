@@ -86,7 +86,7 @@ def _list_versions(root: str) -> list[int]:
 class SnapshotTable:
     """A versioned parquet table rooted at ``root``.
 
-    >>> t = SnapshotTable(spark, "/warehouse/nodes_work", key="id")
+    >>> t = SnapshotTable(spark, "/warehouse/works", key="id")
     >>> t.overwrite(df)           # snapshot 1
     >>> t.merge(updates)          # snapshot 2: last-wins MERGE INTO
     >>> t.read()                  # current state

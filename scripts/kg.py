@@ -22,13 +22,12 @@ def cmd_import(args) -> int:
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("kg-import").getOrCreate()
-    from openalex_neo4j_spark.import_query import import_from_query
-    from openalex_neo4j_spark.materialize import write_graph
-    from openalex_neo4j_spark.sources import read_pages
-
     import os
 
-    from openalex_neo4j_spark.materialize import merge_graph
+    from openalex_neo4j_spark.import_query import import_from_query
+    from openalex_neo4j_spark.materialize import (merge_graph, table_path,
+                                                  write_graph)
+    from openalex_neo4j_spark.sources import read_pages
 
     if args.clear:
         # S5 (neo4j_client.py:350-358): full-graph delete
@@ -37,7 +36,7 @@ def cmd_import(args) -> int:
     g = import_from_query(pages, args.query, limit=args.limit,
                           expand_depth=args.expand_depth,
                           skip_abstracts=args.skip_abstracts)
-    if os.path.isdir(os.path.join(args.out, "nodes_work")):
+    if os.path.isdir(table_path(args.out, "Work")):
         # reference re-import semantics: without --clear, a second
         # import MERGEs into the existing graph (cumulative), exactly
         # like Neo4j MERGE — nodes last-wins, edges set-union, derived
@@ -65,26 +64,20 @@ def cmd_search(args) -> int:
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("kg-search").getOrCreate()
+    from openalex_neo4j_spark.materialize import read_graph
     from openalex_neo4j_spark.search import hybrid_search
 
-    nodes = {
-        label: spark.read.parquet(f"{args.graph}/nodes_{label.lower()}")
-        for label in ("Work", "Author", "Institution", "Source",
-                      "Topic", "Publisher", "Funder")
-    }
-    edges = spark.read.parquet(f"{args.graph}/edges")
-    try:
-        # the persisted import-time index (D2) — never rebuilt per query
-        index = spark.read.parquet(f"{args.graph}/index_fulltext")
-    except Exception:
+    # the persisted import-time index (D2) — never rebuilt per query
+    g = read_graph(spark, args.graph)
+    index = g["index_fulltext"]
+    if index is None:
         # pre-index graph dir: explicit ad-hoc fallback, loudly
-        index = None
         print("WARNING: no persisted fulltext index under "
               f"{args.graph}/index_fulltext — building ad hoc "
               "(full corpus scan per query; re-import with "
               "search indexes to fix)", file=sys.stderr)
     rows = hybrid_search(
-        args.query, nodes, edges, limit=args.limit, rrf_k=args.rrf_k,
+        args.query, g, g["edges"], limit=args.limit, rrf_k=args.rrf_k,
         vector_weight=args.vector_weight,
         fulltext_weight=args.fulltext_weight, index=index,
         allow_adhoc_index=index is None,

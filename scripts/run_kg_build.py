@@ -66,7 +66,7 @@ def main() -> int:
         def run_pipeline(pg):
             # mentions: lazy row-block ckpt + count as the barrier
             # (2 consumers; parquet encode of the text-heavy rows
-            # costs more than pruning saves — see pipeline.build_graph)
+            # costs more than pruning saves — see pipeline.link_pages)
             mm = ckpt(mentions_from_pages(pg), eager=False)
             mm.count()
             tp = time.time()

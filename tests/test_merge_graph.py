@@ -349,3 +349,26 @@ def test_zero_edge_graph_writes_and_merges(spark, tmp_path_factory):
     before = _data_files(root)
     assert merge_graph(g, root) == first
     assert _data_files(root) == before
+
+
+def test_read_graph_maps_tables_and_guards_the_index(spark, half_graphs,
+                                                     tmp_path_factory):
+    """materialize.read_graph returns each committed table by name; a
+    graph written without search indexes has no index (None), and an
+    index file that cannot be read raises instead of reading as
+    missing."""
+    g_a, _ = half_graphs
+    root = str(tmp_path_factory.mktemp("kg_read_graph"))
+    counts = write_graph(g_a, root)
+
+    tables = mat.read_graph(spark, root)
+    assert tables["index_fulltext"] is None
+    assert list(tables) == [*LABELS, "edges", "triples", "index_fulltext"]
+    assert {name: tables[name].count() for name in counts} == counts
+
+    os.makedirs(f"{root}/index_fulltext")
+    with open(f"{root}/index_fulltext/part-00000.parquet", "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(Exception) as e:
+        mat.read_graph(spark, root, ("index_fulltext",))
+    assert "parquet" in str(e.value).lower()

@@ -241,6 +241,35 @@ def _last_job_id(spark) -> int:
 BUILD_AND_WRITE_JOBS = 64
 
 
+def test_spread_decides_from_the_file_scheme(spark, tmp_path):
+    """_spread repartitions a local table with fewer row groups than
+    cores, passes a non-local table through without probing it, and
+    raises on a local footer it cannot read."""
+    from openalex_neo4j_spark.driver_contract import _spread
+
+    target = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "one_file")
+    spark.range(100).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert len(df.inputFiles()) == 1
+    assert _spread(df).rdd.getNumPartitions() == target
+
+    class Remote:
+        sparkSession = spark
+
+        def inputFiles(self):
+            return ["hdfs://namenode:8020/warehouse/t/part-00000.parquet"]
+
+    remote = Remote()
+    assert _spread(remote) is remote
+
+    from urllib.parse import urlparse
+    with open(urlparse(df.inputFiles()[0]).path, "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        _spread(df)
+
+
 def test_build_and_write_job_budget(spark, tmp_path):
     """The build and the cold import submit no more Spark jobs than
     this budget: each job is a driver-serial round trip of fixed

@@ -94,7 +94,7 @@ def test_full_resumable_pipeline_matches_oracle(spark, pages, tmp_path_factory):
 
     # lineage covers every stage
     stages = {r["stage"] for r in tables["lineage"].select("stage").collect()}
-    assert {"extract", "link", "edges", "triples"} <= stages
+    assert {"extract", "link", "materialize"} <= stages
 
     # idempotent re-run: everything skipped, same triples
     tables2 = build_graph_resumable(spark, pages_df, root,
@@ -103,8 +103,68 @@ def test_full_resumable_pipeline_matches_oracle(spark, pages, tmp_path_factory):
              for r in tables2["triples"].collect()}
     assert pred2 == pred
     # no new lineage rows for completed stages
-    lin2 = tables2["lineage"].filter(F.col("stage") == "triples")
+    lin2 = tables2["lineage"].filter(F.col("stage") == "materialize")
     assert lin2.count() == 1
+
+
+def _triples(df) -> set[tuple]:
+    return {tuple(r) for r in df.select("subj", "pred", "obj").collect()}
+
+
+def test_resumable_build_matches_build_graph(spark, pages, tmp_path_factory):
+    """The resumable build runs the same assembly and commit as
+    build_graph + write_graph, so both warehouses hold the same
+    triples."""
+    from openalex_neo4j_spark.materialize import write_graph
+    from openalex_neo4j_spark.pipeline import build_graph
+
+    pages_df, _ = pages
+    direct = str(tmp_path_factory.mktemp("resume_direct"))
+    write_graph(build_graph(pages_df), direct)
+    tables = build_graph_resumable(
+        spark, pages_df, str(tmp_path_factory.mktemp("resume_same")),
+        num_buckets=4, chunk_size=4)
+    assert _triples(tables["triples"]) == _triples(
+        spark.read.parquet(f"{direct}/triples"))
+
+
+def test_graph_stage_crash_resumes_after_link(spark, pages, tmp_path_factory,
+                                             monkeypatch):
+    """A crash inside the graph stage leaves extract and link done: the
+    re-run recomputes neither (no new extract/link lineage rows) and
+    commits the same triples as an uninterrupted run."""
+    import openalex_neo4j_spark.materialize as mat
+
+    pages_df, _ = pages
+    root = str(tmp_path_factory.mktemp("resume_graph_crash"))
+    write_graph = mat.write_graph
+    crashes = []
+
+    def crash_once(g, root, **kw):
+        if not crashes:
+            crashes.append(1)
+            raise RuntimeError("killed mid graph stage")
+        return write_graph(g, root, **kw)
+
+    monkeypatch.setattr(mat, "write_graph", crash_once)
+    with pytest.raises(RuntimeError, match="killed mid graph stage"):
+        build_graph_resumable(spark, pages_df, root, num_buckets=4,
+                              chunk_size=4)
+    assert stage_done(spark, root, "link")
+    assert not stage_done(spark, root, "materialize")
+
+    def stage_rows(stage):
+        return read_lineage(spark, root).filter(
+            F.col("stage") == stage).count()
+    before = {s: stage_rows(s) for s in ("extract", "link")}
+    tables = build_graph_resumable(spark, pages_df, root, num_buckets=4,
+                                   chunk_size=4)
+    assert {s: stage_rows(s) for s in ("extract", "link")} == before
+    assert stage_rows("materialize") == 1
+
+    from openalex_neo4j_spark.pipeline import build_graph
+    assert _triples(tables["triples"]) == _triples(
+        build_graph(pages_df).triples)
 
 
 def test_file_granular_chunk_reads_only_its_files(spark, pages,
