@@ -239,18 +239,18 @@ def q_fulltext_range(spark, sf):
 
 
 def q_snapshot_merge(spark, sf):
-    """S3/A2 SnapshotTable MERGE contract (reference transactional
-    analog: neo4j_client.py:246-252 — MERGE on key, last write wins):
-    overwrite a snapshot table with customers 1-200, merge an
-    overlapping delta (101-300, c_acctbal shifted by +1000), read the
-    committed snapshot back. Exercises the versioned-manifest
-    overwrite -> min/max-pruned merge -> read path end-to-end.
+    """S3/A2 warehouse MERGE contract (reference: neo4j_client.py:
+    246-252 — MERGE on key, last write wins): upsert customers 1-200
+    into a fresh warehouse table, upsert an overlapping delta (101-300,
+    c_acctbal shifted by +1000) on top, and return the committed table.
+    Exercises ``materialize.upsert_nodes`` end to end: the cold write,
+    then the copy-on-write diff that rewrites only the touched files.
     Oracle: the same last-wins merge as a plain CASE in DuckDB."""
     import atexit
     import shutil
     import tempfile
 
-    from openalex_neo4j_spark.table_format import SnapshotTable
+    from openalex_neo4j_spark.materialize import upsert_nodes
 
     c = _t(spark, sf, "customer").select("c_custkey", "c_name", "c_acctbal")
     base = c.filter(F.col("c_custkey") <= 200)
@@ -260,10 +260,10 @@ def q_snapshot_merge(spark, sf):
     )
     root = tempfile.mkdtemp(prefix="spark_graft_snapq_")
     atexit.register(shutil.rmtree, root, ignore_errors=True)
-    t = SnapshotTable(spark, root, key="c_custkey")
-    t.overwrite(base)
-    t.merge(delta)
-    return t.read().select("c_custkey", "c_name", "c_acctbal")
+    path = f"{root}/customer"
+    upsert_nodes(spark, path, base, key="c_custkey")
+    return upsert_nodes(spark, path, delta, key="c_custkey").select(
+        "c_custkey", "c_name", "c_acctbal")
 
 
 def q_filter_orders(spark, sf):
@@ -1468,8 +1468,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_embedding_topk": q_embedding_topk,
     "q_srp_buckets": q_srp_buckets,
     "q_quality": q_quality,
-    # round-4 feature (Lucene range/group) + round-4's biggest new
-    # component (SnapshotTable MERGE) — inside the verified window
+    # Lucene range/group search, and q_snapshot_merge on
+    # materialize.upsert_nodes (in-window per the ratchet rule below)
     "q_fulltext_range": q_fulltext_range,
     "q_snapshot_merge": q_snapshot_merge,
     # round-6: simhash_signatures was restructured (one-exchange

@@ -94,11 +94,7 @@ def _is_bare_file_scan(df: DataFrame) -> bool:
     the scan — so it is only sound for a bare scan. ``inputFiles()``
     being non-empty is NOT sufficient: a filtered/joined frame still
     reports its underlying files."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        return plan.children().isEmpty()
-    except Exception:
-        return False
+    return df._jdf.queryExecution().analyzed().children().isEmpty()
 
 
 def _extract_scheme(files: list[str], num_buckets: int) -> dict:

@@ -1,7 +1,3 @@
-"""Input sources: the pages corpus in its batch and streaming forms."""
+"""Input sources: the pages corpus as a batch table scan."""
 
-from openalex_neo4j_spark.sources.pages import (  # noqa: F401
-    read_pages,
-    read_pages_stream,
-    synthesize_pages,
-)
+from openalex_neo4j_spark.sources.pages import read_pages  # noqa: F401

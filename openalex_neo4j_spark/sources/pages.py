@@ -23,22 +23,3 @@ def read_pages(spark: SparkSession, path: str) -> DataFrame:
     the binary column.
     """
     return spark.read.schema(PAGES_SCHEMA).parquet(path)
-
-
-def read_pages_stream(spark: SparkSession, path: str,
-                      max_files_per_trigger: int | None = None) -> DataFrame:
-    """Streaming source over the same directory (new files = new crawl
-    batches); see openalex_neo4j_spark.streaming."""
-    from openalex_neo4j_spark.streaming import pages_stream
-
-    return pages_stream(spark, path, max_files_per_trigger)
-
-
-def synthesize_pages(spark: SparkSession, n_works: int = 200,
-                     seed: int = 42, filler_words: int = 0,
-                     num_partitions: int = 8) -> DataFrame:
-    """Deterministic synthetic corpus (tests/benchmarks; FIXTURES.md §1)."""
-    from openalex_neo4j_spark.corpus import build_world, pages_dataframe
-
-    world = build_world(n_works, seed=seed, filler_words=filler_words)
-    return pages_dataframe(spark, world, num_partitions=num_partitions)

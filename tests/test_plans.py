@@ -1,6 +1,6 @@
 """Physical-plan contract tests: pushdown, pruning, broadcast, and
 Python-stage placement — the 100TB-readiness properties, pinned; plus
-one contract query checked against its DuckDB oracle."""
+contract queries checked against their DuckDB oracles."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -201,22 +201,30 @@ def test_stage_parquet_empty_partitioned_roundtrip(spark):
     assert set(out.columns) == {"subj", "pred", "obj"}
 
 
-def test_q_simhash_matches_duckdb_oracle(spark):
-    """q_simhash against its ORACLE_SQL on DuckDB over the same
-    documents table: row count, column names and order-insensitive
-    value hash, the comparison scripts/check_oracles.py makes."""
+@pytest.mark.parametrize("query,table,sf_dir", [
+    ("q_simhash", "documents", SF_TINY),
+    # sf0.01: at sf0.001 customer holds only keys 0-149, so the delta
+    # (101-300) would insert no new key
+    ("q_snapshot_merge", "customer", SF),
+], ids=["q_simhash", "q_snapshot_merge"])
+def test_query_matches_duckdb_oracle(spark, query, table, sf_dir):
+    """A contract query against its ORACLE_SQL on DuckDB over the same
+    table: row count, column names and order-insensitive value hash,
+    the comparison scripts/check_oracles.py makes. q_snapshot_merge
+    pins upsert_nodes' last-wins over an overlapping delta against the
+    oracle's CASE."""
     import duckdb
 
     from openalex_neo4j_spark.driver_contract import ORACLE_SQL, QUERIES
     from scripts.check_oracles import value_hash
 
-    df = QUERIES["q_simhash"](spark, SF_TINY)
+    df = QUERIES[query](spark, sf_dir)
     rows = [tuple(r) for r in df.collect()]
     con = duckdb.connect()
     try:
-        con.execute("CREATE VIEW documents AS SELECT * FROM "
-                    f"'{SF_TINY}/documents.parquet'")
-        res = con.execute(ORACLE_SQL["q_simhash"])
+        con.execute(f"CREATE VIEW {table} AS SELECT * FROM "
+                    f"'{sf_dir}/{table}.parquet'")
+        res = con.execute(ORACLE_SQL[query])
         ocols = [d[0] for d in res.description]
         orows = res.fetchall()
     finally:

@@ -368,3 +368,41 @@ def test_lineage_reads_spark_and_pyarrow_rows(spark, tmp_path):
     assert stage_done(spark, root, "materialize")
     assert not stage_done(spark, root, "extract")
     assert completed_partitions(spark, root, "extract") == {0, 1}
+
+
+def test_append_lineage_crash_before_rename_keeps_prior_rows(
+        spark, tmp_path, monkeypatch):
+    """A crash inside append_lineage after its hidden temp file is
+    written but before the rename leaves the lineage exactly as it was:
+    readers skip the hidden file, so no partial row set shows. A later
+    append succeeds and both row sets read back."""
+    import os
+
+    from openalex_neo4j_spark import lineage
+
+    root = str(tmp_path)
+    first = [("link", -1, None, 10, 5, "done", "r1")]
+    second = [("materialize", -1, None, 42, 9, "done", "r2")]
+    append_lineage(root, first)
+
+    real_rename = os.rename
+
+    def crash_once(src, dst):
+        monkeypatch.setattr(lineage.os, "rename", real_rename)
+        assert os.path.getsize(src) > 0
+        raise OSError("killed before rename")
+
+    monkeypatch.setattr(lineage.os, "rename", crash_once)
+    with pytest.raises(OSError, match="killed before rename"):
+        append_lineage(root, second)
+
+    assert [tuple(r) for r in read_lineage(spark, root).collect()] == first
+    assert stage_done(spark, root, "link")
+    assert not stage_done(spark, root, "materialize")
+    assert [f for f in os.listdir(f"{root}/lineage") if f.endswith(".tmp")]
+
+    append_lineage(root, second)
+    got = sorted(tuple(r) for r in read_lineage(spark, root).collect())
+    assert got == sorted(first + second)
+    assert stage_done(spark, root, "link")
+    assert stage_done(spark, root, "materialize")
