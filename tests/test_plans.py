@@ -201,18 +201,10 @@ def test_stage_parquet_empty_partitioned_roundtrip(spark):
     assert set(out.columns) == {"subj", "pred", "obj"}
 
 
-@pytest.mark.parametrize("query,table,sf_dir", [
-    ("q_simhash", "documents", SF_TINY),
-    # sf0.01: at sf0.001 customer holds only keys 0-149, so the delta
-    # (101-300) would insert no new key
-    ("q_snapshot_merge", "customer", SF),
-], ids=["q_simhash", "q_snapshot_merge"])
-def test_query_matches_duckdb_oracle(spark, query, table, sf_dir):
+def _assert_matches_duckdb_oracle(spark, query, table, sf_dir):
     """A contract query against its ORACLE_SQL on DuckDB over the same
     table: row count, column names and order-insensitive value hash,
-    the comparison scripts/check_oracles.py makes. q_snapshot_merge
-    pins upsert_nodes' last-wins over an overlapping delta against the
-    oracle's CASE."""
+    the comparison scripts/check_oracles.py makes."""
     import duckdb
 
     from openalex_neo4j_spark.driver_contract import ORACLE_SQL, QUERIES
@@ -232,6 +224,17 @@ def test_query_matches_duckdb_oracle(spark, query, table, sf_dir):
     assert rows and len(rows) == len(orows)
     assert sorted(df.columns) == sorted(ocols)
     assert value_hash(df.columns, rows) == value_hash(ocols, orows)
+
+
+def test_q_simhash_matches_duckdb_oracle(spark):
+    _assert_matches_duckdb_oracle(spark, "q_simhash", "documents", SF_TINY)
+
+
+def test_q_snapshot_merge_matches_duckdb_oracle(spark):
+    """Pins upsert_nodes' last-wins over an overlapping delta against
+    the oracle's CASE. sf0.01: at sf0.001 customer holds only keys
+    0-149, so the delta (101-300) would insert no new key."""
+    _assert_matches_duckdb_oracle(spark, "q_snapshot_merge", "customer", SF)
 
 
 def _last_job_id(spark) -> int:
