@@ -444,13 +444,3 @@ def write_pages_parquet(world: World, path: str,
                        row_group_size=row_group_size)
     open(f"{path}/_SUCCESS", "w").close()
     return n
-
-
-def world_for_sf(sf_dir: str) -> World:
-    """Scale the synthetic world off the driver's testdata ladder so
-    bench runs at sf0.1 use a proportionally larger corpus."""
-    if "0.1" in sf_dir and "0.01" not in sf_dir and "0.001" not in sf_dir:
-        return build_world(n_works=20000, seed=42)
-    if "0.01" in sf_dir:
-        return build_world(n_works=2000, seed=42)
-    return build_world(n_works=200, seed=42)

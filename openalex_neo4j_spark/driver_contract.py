@@ -110,13 +110,8 @@ def q_group_cross_product(spark, sf):
     cross product; the final distinct's map-side partial agg sees the
     same pairs as the join form and the result is row-identical."""
     li = _t(spark, sf, "lineitem")
-    # round-robin spread, deliberately NOT keyed: a key-hash spread is
-    # absorbed into the aggregation exchange (plan unchanged) and the
-    # two-set collect_set partial agg then still runs on the handful
-    # of scan splits; the RR exchange costs one narrow-row pass but
-    # runs the partial agg on every core (A/B: 4.21s -> 3.88s sf1.0)
     per_order = (
-        _spread(li.select("l_orderkey", "l_partkey", "l_suppkey"))
+        li.select("l_orderkey", "l_partkey", "l_suppkey")
         .groupBy("l_orderkey")
         .agg(F.collect_set("l_partkey").alias("_pks"),
              F.collect_set("l_suppkey").alias("_sks"))
@@ -832,6 +827,8 @@ def _kg_graph_root(spark, n_works: int = 150, search: bool = False) -> str:
     ``search`` (work embeddings + the fulltext index), by
     kg_hybrid_search."""
     import os
+    import shutil
+    import uuid
 
     from openalex_neo4j_spark.corpus import build_world, pages_dataframe
     from openalex_neo4j_spark.kg_oracle import KG_CACHE_VERSION
@@ -840,79 +837,27 @@ def _kg_graph_root(spark, n_works: int = 150, search: bool = False) -> str:
 
     kind = "search" if search else "edges"
     root = f"/tmp/spark_graft_kg_{kind}_w{n_works}_s42_{KG_CACHE_VERSION}"
-    # cache validity is gated on an explicit completion marker, not
-    # bare directory existence: a crashed/concurrent prior build leaves
-    # a partial parquet dir that os.path.exists would accept, silently
-    # serving truncated edges to every graph query. Cross-process
-    # exclusion via an O_CREAT|O_EXCL lock file + build-into-temp +
-    # atomic rename: two concurrent contract runs must not rmtree each
-    # other mid-write (round-3 advice).
-    import shutil
-    import time as _time
-    import uuid as _uuid
-
+    # The root only ever appears whole, by one rename of a finished
+    # build that already holds its marker, so no lock is needed: two
+    # cold processes may both build, and the slower one's rename fails.
     marker = f"{root}/_GRAFT_COMPLETE"
     if os.path.exists(marker):
         return root
-    lock = f"{root}.lock"
-    fd = None
+    tmp = f"{root}.build_{uuid.uuid4().hex[:8]}"
     try:
-        while fd is None:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError:
-                # another process is building; steal only a stale lock
-                # (dead holder) — builds finish in well under 10 min.
-                # The steal is an atomic RENAME to a unique name, not
-                # an unlink: with unlink, two waiters can both judge
-                # the lock stale, the slower unlink then removes the
-                # faster stealer's FRESH lock, and two builders race
-                # rmtree against rename on the same root. Only the
-                # process whose rename succeeded retries the O_EXCL
-                # create; the loser's rename raises and it keeps
-                # waiting.
-                try:
-                    if _time.time() - os.path.getmtime(lock) > 600:
-                        # steal-then-verify: rename FIRST, check the
-                        # mtime of what we actually captured. Checking
-                        # before renaming leaves a window where another
-                        # waiter steals+unlinks and the holder's FRESH
-                        # replacement lock appears at the same path —
-                        # a blind rename would then remove a live lock
-                        # and two builders race on the same root.
-                        stolen = f"{lock}.stale_{_uuid.uuid4().hex[:8]}"
-                        os.rename(lock, stolen)
-                        if _time.time() - os.path.getmtime(stolen) > 600:
-                            os.unlink(stolen)
-                            continue
-                        # captured a fresh lock by mistake — restore it
-                        # and keep waiting (if the holder already
-                        # re-created the path, just drop our copy)
-                        try:
-                            os.rename(stolen, lock)
-                        except OSError:
-                            os.unlink(stolen)
-                except OSError:
-                    continue
-                _time.sleep(0.5)
-                if os.path.exists(marker):
-                    return root
-        if not os.path.exists(marker):
-            shutil.rmtree(root, ignore_errors=True)
-            tmp = f"{root}.build_{_uuid.uuid4().hex[:8]}"
-            world = build_world(n_works, seed=42)
-            write_graph(build_graph(pages_dataframe(spark, world),
-                                    generate_embeddings=search),
-                        tmp, with_search_indexes=search)
-            open(f"{tmp}/_GRAFT_COMPLETE", "w").close()
+        world = build_world(n_works, seed=42)
+        write_graph(build_graph(pages_dataframe(spark, world),
+                                generate_embeddings=search),
+                    tmp, with_search_indexes=search)
+        open(f"{tmp}/_GRAFT_COMPLETE", "w").close()
+        try:
             os.rename(tmp, root)
+        except OSError:
+            pass  # another process promoted its build first
     finally:
-        if fd is not None:
-            os.close(fd)
-            try:
-                os.unlink(lock)
-            except OSError:
-                pass
+        shutil.rmtree(tmp, ignore_errors=True)
+    if not os.path.exists(marker):
+        raise RuntimeError(f"{root} exists without {marker}; remove it")
     return root
 
 

@@ -25,33 +25,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StringType
 
-import os
-
 from openalex_neo4j_spark.mention_parse import parse_mention
 from openalex_neo4j_spark.schemas import MENTION_SCHEMA
 from openalex_neo4j_spark.textnorm import extract_text
-
-# Cap on concurrent JVM->Python Arrow streams per host. This sandbox's
-# kernel degrades pathologically (95% sys time) above ~16 concurrent
-# python-worker channels in one JVM; real clusters run 4-8 cores per
-# executor JVM and never approach that. Both scaling-bench legs run
-# with the same cap, so the comparison stays fair.
-PY_STAGE_MAX_TASKS = int(os.environ.get("SPARK_GRAFT_PY_TASKS", "16"))
-
-
-def _bounded(df: DataFrame) -> DataFrame:
-    """Cap CONCURRENT Arrow streams, not total tasks: concurrency is
-    already bounded by the core count, so coalescing is only needed
-    when the session has more task slots than the stream cap. Below
-    that, keep the input's (finer) partitioning — fewer, fatter
-    Python tasks just lengthen the stage tail (a 14-task extract on 8
-    cores measured ~17s of under-subscribed tail; 30+ tasks erase it).
-    """
-    slots = df.sparkSession.sparkContext.defaultParallelism
-    if slots <= PY_STAGE_MAX_TASKS:
-        return df
-    n = df.rdd.getNumPartitions()
-    return df.coalesce(PY_STAGE_MAX_TASKS) if n > PY_STAGE_MAX_TASKS else df
 
 
 @F.pandas_udf(StringType())
@@ -63,7 +39,7 @@ def extract_text_col(html: pd.Series) -> pd.Series:
 def pages_with_text(pages: DataFrame) -> DataFrame:
     """Fill the ``text`` column: recompute deterministically from html
     (the pre-extracted value may be null — FIXTURES.md §1)."""
-    return _bounded(pages).withColumn("text", extract_text_col(F.col("html")))
+    return pages.withColumn("text", extract_text_col(F.col("html")))
 
 
 _MENTION_COLS = [f.name for f in MENTION_SCHEMA.fields]
@@ -89,6 +65,6 @@ def mentions_from_pages(pages: DataFrame) -> DataFrame:
     Select only (url, html) first so Parquet/Iceberg column pruning
     keeps ``text``/``lang`` out of this exchange entirely.
     """
-    return _bounded(pages.select("url", "html")).mapInPandas(
+    return pages.select("url", "html").mapInPandas(
         _mention_batches, schema=MENTION_SCHEMA
     )

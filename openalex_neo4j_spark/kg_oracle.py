@@ -34,7 +34,7 @@ import numpy as np
 
 from openalex_neo4j_spark.mention_parse import parse_mention
 from openalex_neo4j_spark.oracle import oracle_triples
-from openalex_neo4j_spark.search import EMBED_DIM, OVERFETCH, RRF_K, _hash_embed_one
+from openalex_neo4j_spark.search import OVERFETCH, RRF_K, _hash_embed_one
 
 # bump when pipeline/oracle semantics change: the /tmp materializations
 # are content-keyed only by world size + this version

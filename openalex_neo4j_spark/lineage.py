@@ -184,8 +184,6 @@ def resumable_extract(
     done = completed_partitions(spark, root, "extract")
     todo = [b for b in range(num_buckets) if b not in done]
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     # file-granular path ONLY for a bare file scan — a transformed
     # frame (filter/project/join above the scan) must fall back to the
     # hash-bucket filter, else the transformations are silently lost
@@ -215,19 +213,21 @@ def resumable_extract(
                 parts.append(
                     mentions_from_pages(bdf)
                     .withColumn("bucket", F.lit(b)))
-            if parts:
-                mentions = parts[0]
-                for p in parts[1:]:
-                    mentions = mentions.unionByName(p)
-                mentions.write.mode("overwrite").partitionBy(
-                    "bucket").parquet(out)
+            mentions = parts[0] if parts else None
+            for p in parts[1:]:
+                mentions = mentions.unionByName(p)
         else:
             bucket_col = F.pmod(F.hash(F.col("url")), F.lit(num_buckets))
             part = pages.filter(bucket_col.isin(chunk))
             mentions = mentions_from_pages(part).withColumn(
                 "bucket", F.pmod(F.hash(F.col("url")), F.lit(num_buckets))
             )
-            mentions.write.mode("overwrite").partitionBy("bucket").parquet(out)
+        if mentions is not None:
+            # replaces only the buckets written; a per-write option, so
+            # the caller's session keeps its own overwrite mode
+            (mentions.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("bucket").parquet(out))
         written = read_parquet_or_none(spark, out)
         # None: a chunk of entirely empty buckets, nothing written yet
         out_rows = 0 if written is None else written.filter(

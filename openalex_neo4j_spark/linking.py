@@ -144,9 +144,8 @@ def _minhash_bands(titles: DataFrame, extra_cols: list[str] | None = None
         "t", *extra_cols, f"explode(array({band_exprs})) AS band_key")
 
 
-def _tfidf_weights(titles: DataFrame,
-                   only_tids: DataFrame | None = None,
-                   n_docs: int | None = None) -> DataFrame:
+def _tfidf_weights(titles: DataFrame, only_tids: DataFrame,
+                   n_docs: int) -> DataFrame:
     """(tid, tok, w): TF-IDF weights over distinct group titles —
     norms are NOT attached; the caller derives (tid, nrm) from the
     checkpointed weight frame and applies them AFTER the pair-dot
@@ -159,9 +158,10 @@ def _tfidf_weights(titles: DataFrame,
     downstream scoring joins shuffle only fixed-width values.
 
     ``only_tids``: document frequencies stay GLOBAL (corpus-wide IDF
-    semantics), but per-doc weights/norms are computed only for the
-    named tids — the candidate set is orders of magnitude smaller than
-    the corpus, so the idf-join + norm aggregation shrink accordingly.
+    semantics over ``n_docs`` titles), but per-doc weights/norms are
+    computed only for the named tids — the candidate set is orders of
+    magnitude smaller than the corpus, so the idf-join + norm
+    aggregation shrink accordingly.
     """
     tf = (
         titles.select(
@@ -173,12 +173,9 @@ def _tfidf_weights(titles: DataFrame,
         .groupBy("tid", "tok")
         .agg(F.count("*").alias("tf"))
     )
-    if n_docs is None:
-        n_docs = titles.count()
     # tf rows are unique on (tid, tok) — plain count IS the doc freq
     df_tok = tf.groupBy("tok").agg(F.count("*").alias("df"))
-    if only_tids is not None:
-        tf = tf.join(only_tids, "tid", "left_semi")
+    tf = tf.join(only_tids, "tid", "left_semi")
     w = tf.join(df_tok, "tok").withColumn(
         "w",
         F.col("tf")

@@ -234,19 +234,17 @@ def upsert_nodes(spark: SparkSession, path: str, new_df: DataFrame,
     (neo4j_client.py:246-252; last-wins asserted in its
     tests/integration/test_neo4j_integration.py:134-151).
 
+    ``new_df`` must hold each key once (``ValueError`` otherwise): with
+    two rows for one key, neither is the last.
+
     Commits through ``_cow_commit``: only the files holding an updated
     key are rewritten, and a crash at any point leaves the previous
     table intact (kill tests in tests/test_import_query.py and
     tests/test_merge_graph.py)."""
+    if new_df.groupBy(key).count().filter(F.col("count") > 1).take(1):
+        raise ValueError(f"upsert_nodes: duplicate {key!r} keys in new_df")
     old = _read_prior(spark, path)
     return _cow_commit(path, old, _last_wins(old, new_df, key))[0]
-
-
-# edge-derived node counts that a merge recomputes over the merged edges
-_REFRESH_COLS = {"Work": ["cited_by_count"],
-                 "Author": ["works_count", "cited_by_count"],
-                 "Source": ["works_count"],
-                 "Publisher": ["works_count"]}
 
 
 def merge_graph(g: GraphTables, root: str,
@@ -312,9 +310,8 @@ def merge_graph(g: GraphTables, root: str,
                  .unionByName(new_e).dropDuplicates())
     upserted = {label: _last_wins(old[label], df, "id")
                 for label, df in g.nodes.items()}
-    final = enrich_node_counts(  # checkpoints Work itself
-        {label: df.drop(*_REFRESH_COLS.get(label, []))
-         for label, df in upserted.items()}, edges, linked=None)
+    final = enrich_node_counts(upserted, edges,  # checkpoints Work itself
+                               linked=None)
     final.update(barrier({label: df for label, df in final.items()
                           if label != "Work"}))
     final.update(edges=edges, triples=build_triples(final, edges))

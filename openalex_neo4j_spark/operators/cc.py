@@ -56,7 +56,6 @@ def driver_union_find(edge_rows: list[tuple[str, str]]) -> list[tuple[str, str]]
 def connected_components_auto(
     edges: DataFrame, src: str = "src", dst: str = "dst",
     max_driver_edges: int = DRIVER_CC_MAX_EDGES,
-    n_edges: int | None = None,
 ) -> DataFrame | None:
     """Size-guarded CC: contracted match graphs are usually tiny
     relative to the corpus (groups, not mentions). The strategy probe
@@ -67,15 +66,14 @@ def connected_components_auto(
     a CollectLimit plan disqualifies the Arrow collect path, so the
     rows come back through row-pickle — measured 39s vs ~6s for 185k
     string pairs on the 2M-page corpus. Two cheap driver round-trips
-    beat one slow one. Pass ``n_edges`` when the caller already
-    counted (skips the probe).
+    beat one slow one.
 
     Returns ``None`` when the edge set is empty — callers treat that
     as "no merges" without having run a count of their own."""
     import pandas as pd
 
     spark = edges.sparkSession
-    n = edges.count() if n_edges is None else n_edges
+    n = edges.count()
     if n == 0:
         return None
     if n > max_driver_edges:
@@ -95,7 +93,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Return (node, component) with component = min node id (string
     ordering) reachable in the undirected graph of ``edges``.

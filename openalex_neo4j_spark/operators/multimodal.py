@@ -24,13 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("kind", T.StringType(), True),       # image|audio|video
-    T.StructField("payload", T.BinaryType(), True),
-    T.StructField("mime", T.StringType(), True),
-])
-
 IMAGE_FEATURES_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
     T.StructField("byte_len", T.LongType(), True),
@@ -198,28 +191,4 @@ def decode_image_batches(df: DataFrame, fake: bool = False) -> DataFrame:
 
     return df.select("media_id", "payload").mapInPandas(
         batches, schema=IMAGE_FEATURES_SCHEMA
-    )
-
-
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize stub: passes payload through and records intent columns;
-    a real kernel swaps into the same mapInPandas shape."""
-    return df.withColumn("target_width", F.lit(width)).withColumn(
-        "target_height", F.lit(height)
-    )
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per planned frame
-    (posexplode over a sequence sized by payload length — the
-    partition-explosion shape real frame extraction has), decode
-    stubbed."""
-    n_frames = F.greatest(
-        (F.length("payload") / 1000).cast("int"), F.lit(1)
-    )
-    return df.select(
-        "media_id", n_frames.alias("est_frames"),
-        F.explode(
-            F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))
-        ).alias("frame_idx"),
     )

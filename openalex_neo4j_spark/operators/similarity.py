@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from openalex_neo4j_spark.search import cosine_expr, vector_topk  # noqa: F401  (re-export)
+from openalex_neo4j_spark.search import cosine_expr
 
 
 def _dot_expr(vec_col, query: list[float]):

@@ -41,17 +41,6 @@ def salted_count(df: DataFrame, key_cols: list[str], num_salts: int = 16,
     return phase1.groupBy(*key_cols).agg(F.sum("_partial").alias("cnt"))
 
 
-def salted_agg(df: DataFrame, key_cols: list[str], aggs: list[Column],
-               merge_aggs: list[Column], num_salts: int = 16,
-               salt_cols: list[str] | None = None) -> DataFrame:
-    """General two-phase aggregation: ``aggs`` compute per-(key, salt)
-    partials; ``merge_aggs`` combine partials per key. Caller provides
-    algebraic agg pairs (sum/sum, count/sum, min/min, ...)."""
-    salt = _salt_expr(df, key_cols, salt_cols, num_salts)
-    phase1 = df.withColumn("_salt", salt).groupBy(*key_cols, "_salt").agg(*aggs)
-    return phase1.groupBy(*key_cols).agg(*merge_aggs)
-
-
 def salted_join(big: DataFrame, small: DataFrame, key: str,
                 num_salts: int = 8,
                 salt_cols: list[str] | None = None) -> DataFrame:

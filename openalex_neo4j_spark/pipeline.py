@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from openalex_neo4j_spark.extract import mentions_from_pages
 from openalex_neo4j_spark.linking import link_mentions
@@ -57,7 +57,6 @@ class GraphTables:
     nodes: dict[str, DataFrame]
     edges: DataFrame
     triples: DataFrame
-    mentions: DataFrame
 
 
 def work_nodes(linked: DataFrame) -> DataFrame:
@@ -277,7 +276,9 @@ def enrich_node_counts(nodes: dict[str, DataFrame], edges: DataFrame,
 
     Each is one groupBy over an edge slice (map-side partial agg,
     fixed-width keys) followed by a left join back to the (much
-    smaller) node table — broadcast-friendly at any scale.
+    smaller) node table — broadcast-friendly at any scale. An
+    edge-derived count the node table already carries (a merge's
+    upserted tables) is dropped and recomputed.
 
     ``linked=None`` (the cumulative-import refresh path,
     materialize.merge_graph): every count above is re-derivable from
@@ -291,7 +292,8 @@ def enrich_node_counts(nodes: dict[str, DataFrame], edges: DataFrame,
         .groupBy(F.col("obj").alias("id"))
         .agg(F.count("*").alias("_cited"))
     )
-    work = nodes["Work"].join(cites_in, "id", "left").withColumn(
+    work = nodes["Work"].drop("cited_by_count").join(
+        cites_in, "id", "left").withColumn(
         "cited_by_count", F.coalesce(F.col("_cited"), F.lit(0))
     ).drop("_cited")
     # Checkpoint the enriched Work HERE, before a_cited captures it:
@@ -316,7 +318,8 @@ def enrich_node_counts(nodes: dict[str, DataFrame], edges: DataFrame,
              .alias("cited_by_count"))
     )
     author = (
-        nodes["Author"].join(a_works, "id", "left").join(a_cited, "id", "left")
+        nodes["Author"].drop("works_count", "cited_by_count")
+        .join(a_works, "id", "left").join(a_cited, "id", "left")
         .withColumn("works_count", F.coalesce("works_count", F.lit(0)))
         .withColumn("cited_by_count",
                     F.coalesce("cited_by_count", F.lit(0)))
@@ -343,7 +346,8 @@ def enrich_node_counts(nodes: dict[str, DataFrame], edges: DataFrame,
         F.col("subj").alias("work_id"), F.col("obj").alias("source_id"))
     s_works = pub_in.groupBy(F.col("source_id").alias("id")).agg(
         F.count("*").alias("works_count"))
-    source = nodes["Source"].join(s_works, "id", "left").withColumn(
+    source = nodes["Source"].drop("works_count").join(
+        s_works, "id", "left").withColumn(
         "works_count", F.coalesce("works_count", F.lit(0)))
 
     pub_by = edges.filter(F.col("pred") == "PUBLISHED_BY").select(
@@ -354,7 +358,8 @@ def enrich_node_counts(nodes: dict[str, DataFrame], edges: DataFrame,
         .groupBy(F.col("publisher_id").alias("id"))
         .agg(F.count("*").alias("works_count"))
     )
-    publisher = nodes["Publisher"].join(p_works, "id", "left").withColumn(
+    publisher = nodes["Publisher"].drop("works_count").join(
+        p_works, "id", "left").withColumn(
         "works_count", F.coalesce("works_count", F.lit(0)))
 
     out = dict(nodes)
@@ -510,5 +515,4 @@ def build_graph_from_linked(linked: DataFrame,
     nodes.update(barrier({label: df for label, df in nodes.items()
                           if label != "Work"}))
     triples = build_triples(nodes, edges)
-    return GraphTables(nodes=nodes, edges=edges, triples=triples,
-                       mentions=linked)
+    return GraphTables(nodes=nodes, edges=edges, triples=triples)

@@ -45,14 +45,6 @@ MENTION_SCHEMA = T.StructType([
     T.StructField("referenced_dois", T.ArrayType(T.StringType()), True),
 ])
 
-EDGE_SCHEMA = T.StructType([
-    T.StructField("subj", T.StringType(), False),
-    T.StructField("pred", T.StringType(), False),
-    T.StructField("obj", T.StringType(), False),
-])
-
-TRIPLE_SCHEMA = EDGE_SCHEMA
-
 LINEAGE_SCHEMA = T.StructType([
     T.StructField("stage", T.StringType(), False),
     T.StructField("partition_id", T.IntegerType(), False),
@@ -72,7 +64,3 @@ EDGE_TYPES = [
     "FUNDED_BY",         # (Work)-[:FUNDED_BY]->(Funder)      :319-332
     "PUBLISHED_BY",      # (Source)-[:PUBLISHED_BY]->(Publisher) :334-346
 ]
-
-ENTITY_TYPES = [
-    "Work", "Author", "Institution", "Source", "Topic", "Publisher", "Funder",
-]  # neo4j_client.py:37-46

@@ -240,32 +240,22 @@ def stage_parquet(df, name: str = "stage", partition_by: list[str] | None = None
     return spark.read.schema(df.schema).parquet(path)
 
 
-def iter_ckpt(df, eager: bool = True):
+def iter_ckpt(df):
     """Lineage truncation for ITERATIVE loops (CC label propagation,
     PageRank) — fault-tolerance selectable per session.
 
     ``localCheckpoint`` blocks live only on the executor that computed
     them: on a real cluster, one lost executor makes the RDD
-    unrecoverable and fails the whole job — for a 10^12-document run
-    that is a guaranteed failure mode, not a tail risk. When a
-    checkpoint directory is configured (``SparkContext.setCheckpointDir``
-    by the application, or the ``SPARK_GRAFT_CHECKPOINT_DIR`` env var
-    pointing at shared storage — HDFS/S3 on a cluster), iterative
-    loops use *reliable* ``DataFrame.checkpoint()``: blocks are written
-    to that directory and survive executor loss.
+    unrecoverable and fails the whole job. When a checkpoint directory
+    is configured (``SparkContext.setCheckpointDir``, or Spark's own
+    ``spark.checkpoint.dir`` pointing at shared storage — HDFS/S3 on a
+    cluster), iterative loops use *reliable* ``DataFrame.checkpoint()``:
+    blocks are written to that directory and survive executor loss.
 
-    With no directory configured (the single-JVM sandbox, where
-    executor loss IS job loss anyway), falls back to
-    ``localCheckpoint`` — per-iteration distributed-FS round-trips
-    would cost more than they protect there.
+    With no directory configured (a single JVM, where executor loss IS
+    job loss anyway), falls back to ``localCheckpoint`` — per-iteration
+    distributed-FS round-trips would cost more than they protect there.
     """
-    import os as _os
-
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        d = _os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-        if d:
-            sc.setCheckpointDir(d)
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint()
+    return df.localCheckpoint()

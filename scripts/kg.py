@@ -27,7 +27,7 @@ def cmd_import(args) -> int:
     from openalex_neo4j_spark.import_query import import_from_query
     from openalex_neo4j_spark.materialize import (merge_graph, table_path,
                                                   write_graph)
-    from openalex_neo4j_spark.sources import read_pages
+    from openalex_neo4j_spark.sources.pages import read_pages
 
     if args.clear:
         # S5 (neo4j_client.py:350-358): full-graph delete

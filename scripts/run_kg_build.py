@@ -57,33 +57,12 @@ def main() -> int:
         pages = pages_dataframe(spark, world, num_partitions=args.num_partitions)
 
     if args.count_only:
-        from openalex_neo4j_spark.extract import mentions_from_pages
-        from openalex_neo4j_spark.linking import link_mentions
-        from openalex_neo4j_spark.pipeline import build_graph_from_linked
-
-        from openalex_neo4j_spark.session import ckpt, stage_parquet
-
-        def run_pipeline(pg):
-            # mentions: lazy row-block ckpt + count as the barrier
-            # (2 consumers; parquet encode of the text-heavy rows
-            # costs more than pruning saves — see pipeline.link_pages)
-            mm = ckpt(mentions_from_pages(pg), eager=False)
-            mm.count()
-            tp = time.time()
-            # linked: COLUMNAR stage — it fans out to 7 node builders
-            # + edges, each column-pruning its own scan
-            lk = stage_parquet(link_mentions(mm), "linked")
-            tl = time.time()
-            g = build_graph_from_linked(lk)
-            return g.triples.count(), tp, tl
-
         if args.warmup_pages > 0:
             # repartition: limit() collapses to one partition, which
             # would serialize the whole warmup on a single core
             ncores = spark.sparkContext.defaultParallelism
-            run_pipeline(
-                pages.limit(args.warmup_pages)
-                .repartition(ncores).persist())
+            build_graph(pages.limit(args.warmup_pages)
+                        .repartition(ncores).persist()).triples.count()
             # drop the warmup's checkpoint blocks before the timed
             # pass: python GC releases the DataFrame refs, JVM GC lets
             # the ContextCleaner unpersist the orphaned RDD blocks
@@ -93,16 +72,11 @@ def main() -> int:
             time.sleep(2)
 
         t0 = time.time()
-        n_triples, t_p, t_l = run_pipeline(pages)
+        n_triples = build_graph(pages).triples.count()
         wall = time.time() - t0
-        t_parse = t_p - t0
-        t_link = t_l - t_p
         print(json.dumps({
             "triples": n_triples,
             "pipeline_sec": round(wall, 2),
-            "parse_sec": round(t_parse, 2),
-            "link_sec": round(t_link, 2),
-            "assemble_sec": round(wall - t_parse - t_link, 2),
             "triples_per_sec": round(n_triples / wall, 1),
         }))
         return 0

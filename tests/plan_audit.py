@@ -7,11 +7,10 @@ pin the plan properties that matter at 100 TB:
 - scans read only the projected columns (``ReadSchema``),
 - small dimensions broadcast instead of shuffling,
 - Python appears only where a pandas stage is intentional
-  (``ArrowEvalPython``/``MapInPandas`` counts),
-- wide whole-stage-codegen spans.
+  (``ArrowEvalPython``/``MapInPandas`` counts).
 
-Used by tests/test_plans.py; also handy interactively:
-``print(explain_str(df))``.
+Used by tests/test_plans.py, test_temporal.py and test_graphalgo.py;
+also handy interactively: ``print(explain_str(df))``.
 """
 
 from __future__ import annotations
@@ -59,8 +58,3 @@ def python_eval_count(df: DataFrame) -> int:
         + s.count("BatchEvalPython")
         + s.count("FlatMapGroupsInPandas")
     )
-
-
-def wholestage_codegen_spans(df: DataFrame) -> int:
-    s = explain_str(df, "simple")
-    return len(set(re.findall(r"\*\((\d+)\)", s)))

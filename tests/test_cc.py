@@ -82,7 +82,7 @@ def test_auto_driver_path_matches_union_find(spark):
     assert got == dict(driver_union_find(pairs))
 
 
-def test_reliable_checkpoint_path_identical(spark, tmp_path, monkeypatch):
+def test_reliable_checkpoint_path_identical(spark, tmp_path):
     """With a checkpoint dir configured, the iterative loop uses
     reliable DataFrame.checkpoint() (fault-tolerant: blocks live in
     the checkpoint dir, not on a single executor) and produces the
@@ -93,8 +93,8 @@ def test_reliable_checkpoint_path_identical(spark, tmp_path, monkeypatch):
             for r in connected_components(df).collect()}
 
     ckdir = str(tmp_path / "reliable_ck")
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", ckdir)
     try:
+        spark.sparkContext.setCheckpointDir(ckdir)
         got = {r["node"]: r["component"]
                for r in connected_components(df).collect()}
         assert got == want

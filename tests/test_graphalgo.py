@@ -52,7 +52,7 @@ def write_bucketed(df, table: str, key: str, num_buckets: int = 16) -> None:
 
 
 def test_bucketed_write_joins_without_exchange(spark, tmp_path):
-    from openalex_neo4j_spark.plans import explain_str
+    from plan_audit import explain_str
 
     a = spark.createDataFrame([(i, f"v{i}") for i in range(100)], ["id", "va"])
     b = spark.createDataFrame([(i, i * 2) for i in range(100)], ["id", "vb"])

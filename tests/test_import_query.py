@@ -117,6 +117,27 @@ def test_upsert_last_wins(spark, tmp_path):
     assert got == {"a": "Title v2", "b": "B", "c": "C"}
 
 
+def test_upsert_rejects_duplicate_keys(spark, tmp_path):
+    """Two rows for one key have no last one: the cold write and a
+    delta both raise, and the table keeps its committed rows."""
+    import os
+
+    from openalex_neo4j_spark.materialize import upsert_nodes
+
+    path = str(tmp_path / "nodes")
+    dup = spark.createDataFrame([(1, "a"), (1, "b"), (2, "c")], ["id", "v"])
+    with pytest.raises(ValueError, match="duplicate"):
+        upsert_nodes(spark, path, dup)
+    assert not os.path.exists(path)
+
+    upsert_nodes(spark, path,
+                 spark.createDataFrame([(1, "x"), (3, "y")], ["id", "v"]))
+    with pytest.raises(ValueError, match="duplicate"):
+        upsert_nodes(spark, path, dup)
+    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == [
+        (1, "x"), (3, "y")]
+
+
 def test_upsert_crash_preserves_old_table(spark, tmp_path, monkeypatch):
     """Kill-between-write safety: an upsert that dies after staging but
     before the rename-commit leaves the previous table fully readable;

@@ -192,7 +192,7 @@ def test_edge_only_delta_appends_and_keeps_other_partitions(
         nodes=nodes,
         edges=edges.unionByName(
             spark.createDataFrame(extra, "subj string, pred string, obj string")),
-        triples=None, mentions=None)
+        triples=None)
     before = _data_files(root)
     counts = merge_graph(delta, root)
 

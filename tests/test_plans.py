@@ -13,7 +13,7 @@ from openalex_neo4j_spark.driver_contract import (
     q_token_explode,
     q_top_orders,
 )
-from openalex_neo4j_spark.plans import (
+from plan_audit import (
     explain_str,
     has_broadcast_join,
     has_pushed_filters,
@@ -279,6 +279,58 @@ def test_spread_decides_from_the_file_scheme(spark, tmp_path):
         fh.write(b"not a parquet file")
     with pytest.raises(Exception, match="(?i)parquet"):
         _spread(df)
+
+
+def test_kg_graph_root_concurrent_cold_builds_share_one_root(spark,
+                                                            monkeypatch):
+    """Two cold callers both build (held together until both are
+    writing), one rename promotes its build, the other discards its
+    own: both get the same complete root and no build dir is left."""
+    import glob
+    import os
+    import shutil
+    import threading
+
+    import openalex_neo4j_spark.corpus as corpus
+    import openalex_neo4j_spark.materialize as mat
+    import openalex_neo4j_spark.pipeline as pipe
+    from openalex_neo4j_spark.driver_contract import _kg_graph_root
+
+    both_writing = threading.Barrier(2, timeout=120)
+
+    def fake_write_graph(g, root, with_search_indexes=False):
+        both_writing.wait()
+        os.makedirs(f"{root}/edges")
+        open(f"{root}/edges/part-0.parquet", "w").close()
+
+    for mod, name in ((corpus, "build_world"), (corpus, "pages_dataframe"),
+                      (pipe, "build_graph")):
+        monkeypatch.setattr(mod, name, lambda *a, **k: None)
+    monkeypatch.setattr(mat, "write_graph", fake_write_graph)
+    n_works = 1000 + os.getpid() % 100000  # a root no other run shares
+    roots, errors = [], []
+
+    def call():
+        try:
+            roots.append(_kg_graph_root(spark, n_works))
+        except Exception as e:  # surfaced by the asserts below
+            errors.append(e)
+
+    threads = [threading.Thread(target=call) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(300)
+    try:
+        assert not any(t.is_alive() for t in threads)
+        assert not errors and len(roots) == 2 and roots[0] == roots[1]
+        root = roots[0]
+        assert os.path.exists(f"{root}/_GRAFT_COMPLETE")
+        assert os.path.exists(f"{root}/edges/part-0.parquet")
+        assert glob.glob(f"{root}.build_*") == []
+    finally:
+        for d in glob.glob(f"/tmp/spark_graft_kg_edges_w{n_works}_s42_*"):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def test_build_and_write_job_budget(spark, tmp_path):

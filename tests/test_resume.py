@@ -128,6 +128,22 @@ def test_resumable_build_matches_build_graph(spark, pages, tmp_path_factory):
         spark.read.parquet(f"{direct}/triples"))
 
 
+def test_resumable_build_keeps_session_overwrite_mode(spark, pages,
+                                                     tmp_path_factory):
+    """The extract's dynamic partition overwrite is a per-write option:
+    after the build, the caller's session still overwrites statically."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        build_graph_resumable(
+            spark, pages[0], str(tmp_path_factory.mktemp("resume_conf")),
+            num_buckets=4, chunk_size=2)
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.set(key, prior)
+
+
 def test_graph_stage_crash_resumes_after_link(spark, pages, tmp_path_factory,
                                              monkeypatch):
     """A crash inside the graph stage leaves extract and link done: the

@@ -59,7 +59,7 @@ def test_range_join_buckets(spark):
 
 
 def test_range_join_is_broadcast(spark):
-    from openalex_neo4j_spark.plans import explain_str
+    from plan_audit import explain_str
     rows = spark.createDataFrame([(1, 5.0)], ["id", "v"])
     ranges = spark.createDataFrame([(0.0, 50.0, "low")], ["lo", "hi", "band"])
     s = explain_str(range_join(rows, ranges, "v"), "simple")
