@@ -816,6 +816,24 @@ def kg_top_cited(spark, sf):
     )
 
 
+def _source_key(pkg) -> str:
+    """Short hash of every ``.py`` file under ``pkg`` (a directory
+    ``Path``, or an ``importlib.resources`` traversable, which also
+    reads a zipped package), with its relative path."""
+    import hashlib
+
+    h = hashlib.sha256()
+
+    def walk(d, rel: str) -> None:
+        for e in sorted(d.iterdir(), key=lambda e: e.name):
+            if e.is_dir():
+                walk(e, f"{rel}{e.name}/")
+            elif e.name.endswith(".py"):
+                h.update(f"{rel}{e.name}\0".encode() + e.read_bytes())
+    walk(pkg, "")
+    return h.hexdigest()[:12]
+
+
 def _kg_graph_root(spark, n_works: int = 150, search: bool = False) -> str:
     """Build-once graph tables for the README graph-query surface
     (README.md:330-357): the graph at (n_works, seed 42) is
@@ -825,18 +843,20 @@ def _kg_graph_root(spark, n_works: int = 150, search: bool = False) -> str:
     kg_top_cited / kg_collaborators / kg_institution_works /
     kg_cocited_pairs (one build instead of one per query), and, with
     ``search`` (work embeddings + the fulltext index), by
-    kg_hybrid_search."""
+    kg_hybrid_search. The root is named by the package's source
+    hash, so a cached graph is always the current code's build."""
     import os
     import shutil
     import uuid
+    from importlib.resources import files
 
     from openalex_neo4j_spark.corpus import build_world, pages_dataframe
-    from openalex_neo4j_spark.kg_oracle import KG_CACHE_VERSION
     from openalex_neo4j_spark.materialize import write_graph
     from openalex_neo4j_spark.pipeline import build_graph
 
     kind = "search" if search else "edges"
-    root = f"/tmp/spark_graft_kg_{kind}_w{n_works}_s42_{KG_CACHE_VERSION}"
+    key = _source_key(files(__package__))
+    root = f"/tmp/spark_graft_kg_{kind}_w{n_works}_s42_{key}"
     # The root only ever appears whole, by one rename of a finished
     # build that already holds its marker, so no lock is needed: two
     # cold processes may both build, and the slower one's rename fails.

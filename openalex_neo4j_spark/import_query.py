@@ -26,10 +26,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from openalex_neo4j_spark import ids
 from openalex_neo4j_spark.pipeline import (GraphTables, build_graph_from_linked,
                                            link_pages)
 from openalex_neo4j_spark.search import build_fulltext_index, fulltext_topk
-from openalex_neo4j_spark.session import stage_parquet
+from openalex_neo4j_spark.session import iter_ckpt, stage_parquet
 
 
 def seed_work_keys(linked: DataFrame, query: str, limit: int) -> DataFrame:
@@ -64,17 +65,15 @@ def expand_frontier(linked: DataFrame, collected: DataFrame,
     fetches nothing new — importer.py:69-71; we keep the early-out,
     results are identical).
     """
-    refs = linked.select(
+    refs = iter_ckpt(linked.select(
         "work_key", F.explode("referenced_dois").alias("ref")
-    ).filter(F.col("ref").isNotNull() & (F.trim("ref") != "")).select(
-        "work_key",
-        F.concat(F.lit("doi:"), F.lower(F.trim("ref"))).alias("ref_key"),
-    ).localCheckpoint()
-    known_keys = linked.select("work_key").distinct().localCheckpoint()
+    ).select("work_key", ids.work_id_col("ref").alias("ref_key")
+             ).filter(F.col("ref_key").isNotNull()))
+    known_keys = iter_ckpt(linked.select("work_key").distinct())
 
-    collected = collected.localCheckpoint()
+    collected = iter_ckpt(collected)
     for _ in range(depth):
-        frontier = (
+        frontier = iter_ckpt(
             refs.join(collected, "work_key", "left_semi")
             .select(F.col("ref_key").alias("work_key"))
             .distinct()
@@ -82,10 +81,10 @@ def expand_frontier(linked: DataFrame, collected: DataFrame,
             .join(collected, "work_key", "left_anti")
             # existence: only refs that resolve in the corpus (S2)
             .join(known_keys, "work_key", "left_semi")
-        ).localCheckpoint()
+        )
         if frontier.isEmpty():
             break
-        collected = collected.union(frontier).localCheckpoint()
+        collected = iter_ckpt(collected.union(frontier))
     return collected
 
 

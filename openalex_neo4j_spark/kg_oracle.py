@@ -36,8 +36,9 @@ from openalex_neo4j_spark.mention_parse import parse_mention
 from openalex_neo4j_spark.oracle import oracle_triples
 from openalex_neo4j_spark.search import OVERFETCH, RRF_K, _hash_embed_one
 
-# bump when pipeline/oracle semantics change: the /tmp materializations
-# are content-keyed only by world size + this version
+# bump when oracle semantics change: the /tmp oracle materialization is
+# keyed only by world size + this version (the built contract graphs
+# are keyed by the package's source hash, driver_contract._source_key)
 KG_CACHE_VERSION = "r2a"
 ORACLE_ROOT = f"/tmp/spark_graft_kg_oracle_{KG_CACHE_VERSION}"
 

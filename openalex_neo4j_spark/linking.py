@@ -37,6 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from openalex_neo4j_spark import ids
 from openalex_neo4j_spark.operators.cc import connected_components_auto
 from openalex_neo4j_spark.session import ckpt
 
@@ -44,29 +45,14 @@ NUM_HASHES = 16
 BAND_SIZE = 2
 COSINE_THRESHOLD = 0.60
 #: broadcast the tid->cluster_id map into the final mention join when
-#: the title-group count fits (8M rows ~ a few hundred MB on a 16g
-#: driver); larger corpora take the shuffle-join path
-BROADCAST_CLUSTER_MAP_MAX_GROUPS = 8_000_000
-#: ...and only when the ESTIMATED map payload also fits: the row cap
-#: alone is byte-blind — cluster ids are strings (min canon_key or
-#: 'title:<norm title>', potentially hundreds of bytes), so 8M rows
-#: can be multiple GB and OOM a library caller's default-sized driver.
-#: Estimated as rows * (avg id length + key/row overhead) from the
-#: same single driver round-trip that counts groups.
+#: its ESTIMATED payload fits; larger corpora take the shuffle-join
+#: path. Cluster ids are strings (min canon_key or 'title:<norm
+#: title>', potentially hundreds of bytes), so a row count alone
+#: cannot bound the map. Estimated as rows * (avg id length + key/row
+#: overhead) from the same single driver round-trip that counts
+#: groups; at >= 56 bytes a row it admits at most ~4.8M groups.
 BROADCAST_CLUSTER_MAP_MAX_BYTES = 256 << 20
 _BROADCAST_ROW_OVERHEAD = 56  # tid long + UTF8String + hash-relation entry
-
-
-def _with_work_key(mentions: DataFrame) -> DataFrame:
-    """Canonical key for DOI-bearing mentions: ``doi:<lowercased doi>``
-    (id scheme in ids.py; analog of extract_openalex_id models.py:7-20)."""
-    return mentions.withColumn(
-        "work_key",
-        F.when(
-            F.col("doi").isNotNull() & (F.trim(F.col("doi")) != ""),
-            F.concat(F.lit("doi:"), F.lower(F.trim(F.col("doi")))),
-        ),
-    )
 
 
 def _minhash_bands(titles: DataFrame, extra_cols: list[str] | None = None
@@ -197,7 +183,8 @@ def link_mentions(mentions: DataFrame) -> DataFrame:
     the string is carried only where an output needs it (the minted
     ``title:<min norm_title>`` cluster ids and the final mention map).
     """
-    m = _with_work_key(mentions)
+    # canonical key of a DOI-bearing mention (null for an orphan)
+    m = mentions.withColumn("work_key", ids.work_id_col("doi"))
     tid = F.xxhash64(F.col("norm_title"))
 
     # (1)+(2) exact grouping + canonical keys, one aggregation.
@@ -224,9 +211,8 @@ def link_mentions(mentions: DataFrame) -> DataFrame:
         F.count(F.when(F.col("canon_key").isNull(), 1)).alias("n_orph"),
         # avg cluster-id length for the broadcast byte estimate below
         # (cluster_id = canon_key, else 'title:' + norm_title)
-        F.avg(F.length(F.coalesce(
-            F.col("canon_key"),
-            F.concat(F.lit("title:"), F.col("norm_title"))))).alias("idlen"),
+        F.avg(F.length(F.coalesce("canon_key", ids.title_id_col(
+            "norm_title")))).alias("idlen"),
     ).collect()[0]
     n_groups, n_orphans = _counts["n"], _counts["n_orph"]
     est_map_bytes = int(
@@ -375,7 +361,7 @@ def link_mentions(mentions: DataFrame) -> DataFrame:
         "tid",
         F.coalesce(
             F.min("canon_key").over(comp_w),
-            F.concat(F.lit("title:"), F.min("norm_title").over(comp_w)),
+            ids.title_id_col(F.min("norm_title").over(comp_w)),
         ).alias("cluster_id"),
     )
     # The final map-back join is against the FULL mention payload
@@ -391,8 +377,7 @@ def link_mentions(mentions: DataFrame) -> DataFrame:
     # string) row per title group), eliminating the mention-table
     # exchange entirely; beyond the cap (cluster-scale corpora where
     # the map itself is GBs) fall back to the shuffle join.
-    if (n_groups <= BROADCAST_CLUSTER_MAP_MAX_GROUPS
-            and est_map_bytes <= BROADCAST_CLUSTER_MAP_MAX_BYTES):
+    if est_map_bytes <= BROADCAST_CLUSTER_MAP_MAX_BYTES:
         tid_to_cluster = F.broadcast(tid_to_cluster)
 
     out = (
@@ -402,7 +387,7 @@ def link_mentions(mentions: DataFrame) -> DataFrame:
             "work_key",
             # DOI mentions keep their own identity; orphans take the cluster
             F.coalesce(F.col("work_key"), F.col("cluster_id"),
-                       F.concat(F.lit("title:"), F.col("norm_title"))),
+                       ids.title_id_col("norm_title")),
         )
         .drop("cluster_id", "tid")
     )

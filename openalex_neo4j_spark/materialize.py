@@ -43,8 +43,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from openalex_neo4j_spark.lineage import append_lineage
-from openalex_neo4j_spark.pipeline import GraphTables
-from openalex_neo4j_spark.session import (barrier, ckpt, concurrently,
+from openalex_neo4j_spark.pipeline import GraphTables, finish_graph
+from openalex_neo4j_spark.session import (ckpt, concurrently,
                                           read_parquet_or_none)
 
 
@@ -288,9 +288,6 @@ def merge_graph(g: GraphTables, root: str,
     imported records either).
     """
     spark = g.edges.sparkSession
-    from openalex_neo4j_spark.pipeline import (build_triples,
-                                               enrich_node_counts)
-
     t0 = time.time()
     names = [*g.nodes, "edges", "triples"]
     if with_search_indexes:
@@ -303,18 +300,13 @@ def merge_graph(g: GraphTables, root: str,
     # the node refresh, the triples and the fulltext index then read no
     # file a concurrent commit moves, so all tables commit at once. The
     # merged edges go first (the refresh reads them), then the node
-    # tables in one concurrent barrier.
+    # tables, by the build's own finishing step.
     new_e = g.edges.select("subj", "pred", "obj")
     edges = ckpt(new_e if old["edges"] is None
                  else old["edges"].select("subj", "pred", "obj")
                  .unionByName(new_e).dropDuplicates())
-    upserted = {label: _last_wins(old[label], df, "id")
-                for label, df in g.nodes.items()}
-    final = enrich_node_counts(upserted, edges,  # checkpoints Work itself
-                               linked=None)
-    final.update(barrier({label: df for label, df in final.items()
-                          if label != "Work"}))
-    final.update(edges=edges, triples=build_triples(final, edges))
+    final = finish_graph({label: _last_wins(old[label], df, "id")
+                          for label, df in g.nodes.items()}, edges)
     return _commit_graph(root, final, old, with_search_indexes,
                          ("merge", "merge"), t0)
 
@@ -347,20 +339,20 @@ def read_graph(spark: SparkSession, root: str,
     return concurrently(read, {name: (name,) for name in names})
 
 
-def _commit_graph(root: str, final: dict[str, DataFrame],
+def _commit_graph(root: str, g: GraphTables,
                   old: dict[str, DataFrame | None], with_search_indexes: bool,
                   lineage: tuple[str, str], t0: float) -> dict[str, int]:
-    """Commit every table of a graph (``final``: one frame per node
-    label, plus ``edges`` and ``triples``) through ``_cow_commit``, each
+    """Commit every table of ``g`` through ``_cow_commit``, each
     as its own concurrent Spark job, then append the ``lineage`` row
     (stage, run id) with ``lineage.append_lineage`` (no Spark job);
     return the row counts. ``old`` maps a table name
     to its prior rows (missing: nothing to diff). The fulltext index is
     built from the checkpointed ``Work`` frame in the same batch."""
+    final = {**g.nodes, "edges": g.edges, "triples": g.triples}
     if with_search_indexes:
         from openalex_neo4j_spark.search import work_fulltext_index
 
-        final = {**final, "index_fulltext": work_fulltext_index(final["Work"])}
+        final["index_fulltext"] = work_fulltext_index(g.nodes["Work"])
     tables = {name: (table_path(root, name), old.get(name), df,
                      "pred" if name in ("edges", "triples") else None)
               for name, df in final.items()}
@@ -386,7 +378,5 @@ def write_graph(g: GraphTables, root: str,
     search path then reads the stored index instead of rebuilding it
     per query.
     """
-    t0 = time.time()
-    return _commit_graph(root, {**g.nodes, "edges": g.edges,
-                                "triples": g.triples},
-                         {}, with_search_indexes, ("materialize", "write"), t0)
+    return _commit_graph(root, g, {}, with_search_indexes,
+                         ("materialize", "write"), time.time())

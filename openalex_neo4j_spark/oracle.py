@@ -43,7 +43,7 @@ def work_node_id(w: Work) -> str:
     canonicalization must reproduce."""
     if w.has_canonical:
         return ids.work_id(w.doi)
-    return "title:" + min(normalize_title(t) for t in w.page_titles)
+    return ids.title_id(min(normalize_title(t) for t in w.page_titles))
 
 
 def work_title_winner(w: Work) -> str:

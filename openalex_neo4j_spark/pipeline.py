@@ -5,11 +5,16 @@ Stage graph (re-expression of the reference's 7-step import,
 importer.py:36-98 — see SURVEY.md §3.1):
 
   pages ──extract──> mentions ──link──> linked mentions (work_key)
+        ├─ one frame per entity (explode, validity filter, ``ids``
+        │    twin) feeding both its nodes and its edges:
         ├─ work/author/institution/source/topic/funder/publisher nodes
         │    (deterministic first-wins winners — A1 importer.py:100-104)
         ├─ 7 edge types via explode + distinct (+ CITES endpoint
         │    existence semi-join — F2 importer.py:242,293)
-        └─ triples = edges ∪ exploded node-property triples
+        └─ finish_graph (also the end of every merge,
+             materialize.merge_graph): count properties -> one
+             barrier over the node tables -> triples = edges ∪
+             exploded node-property triples
 
 Scale notes:
 - the binary ``html`` column dies at the mention stage (column
@@ -25,9 +30,11 @@ Scale notes:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
+from openalex_neo4j_spark import ids
 from openalex_neo4j_spark.extract import mentions_from_pages
 from openalex_neo4j_spark.linking import link_mentions
 from openalex_neo4j_spark.session import barrier, ckpt, stage_parquet
@@ -46,10 +53,6 @@ def camel_label_expr(col):
                                p.substr(F.lit(2), F.length(p))),
         ),
     )
-
-
-def _slug_expr(col):
-    return F.regexp_replace(F.trim(F.lower(col)), r"\s+", "-")
 
 
 @dataclass
@@ -98,71 +101,73 @@ def work_nodes(linked: DataFrame) -> DataFrame:
     )
 
 
-def author_nodes(linked: DataFrame) -> DataFrame:
-    # group by the COMPUTED id, not the raw orcid: two raw values that
-    # normalize to one id (' X'/'X') must yield ONE node row — the
-    # unique-id constraint (D1) every node table guarantees, and the
-    # invariant that lets build_triples skip a global dedup.
-    a = linked.select(F.explode("authors").alias("a")).select(
-        F.trim(F.col("a.orcid")).alias("orcid"),
-        F.col("a.display_name").alias("display_name"),
-    ).filter(F.col("orcid").isNotNull() & (F.col("orcid") != ""))
-    return a.groupBy(
-        F.concat(F.lit("orcid:"), F.col("orcid")).alias("id")
-    ).agg(
-        F.min("display_name").alias("display_name"),
-        F.min("orcid").alias("orcid"),
-    )
+def _authors(linked: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, id, orcid, display_name): one row per author mention
+    with an ORCID."""
+    a = linked.select(*keep, F.explode("authors").alias("a"))
+    return a.select(
+        *keep, ids.author_id_col("a.orcid").alias("id"),
+        ids.strip_col("a.orcid").alias("orcid"), "a.display_name",
+    ).filter(F.col("id").isNotNull())
 
 
-def institution_nodes(linked: DataFrame) -> DataFrame:
-    i = linked.select(F.explode("institutions").alias("i")).select(
-        F.col("i.ror").alias("ror"),
-        F.col("i.display_name").alias("display_name"),
-        F.col("i.country_code").alias("country_code"),
-    ).filter(F.col("ror").isNotNull() & (F.trim("ror") != ""))
-    # id-keyed dedup (D1): distinct ror spellings sharing a ror tail
-    # ('https://ror.org/x' vs 'ror.org/x') collapse to one node
-    return i.groupBy(
-        F.concat(
-            F.lit("ror:"), F.element_at(F.split(F.trim("ror"), "/"), -1)
-        ).alias("id")
-    ).agg(
-        F.min("display_name").alias("display_name"),
-        F.min("country_code").alias("country_code"),
-        F.min("ror").alias("ror"),
-    )
+def _institutions(df: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, id, ror, display_name, country_code): one row per entry
+    of ``df.institutions`` with a ROR id."""
+    i = df.select(*keep, F.explode("institutions").alias("i"))
+    return i.select(
+        *keep, ids.institution_id_col("i.ror").alias("id"), "i.ror",
+        "i.display_name", "i.country_code",
+    ).filter(F.col("id").isNotNull())
 
 
-def source_nodes(linked: DataFrame) -> DataFrame:
-    s = linked.filter(
-        F.col("issn").isNotNull() & (F.trim("issn") != "")
-    ).select(F.trim("issn").alias("issn"), F.col("venue"))
-    return s.groupBy("issn").agg(F.min("venue").alias("display_name")).select(
-        F.concat(F.lit("issn:"), F.col("issn")).alias("id"),
-        "display_name", "issn",
-    )
+def _sources(linked: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, id, issn, venue): one row per mention with an ISSN."""
+    return linked.select(
+        *keep, ids.source_id_col("issn").alias("id"),
+        ids.strip_col("issn").alias("issn"), "venue",
+    ).filter(F.col("id").isNotNull())
 
 
-def _named_nodes(linked: DataFrame, array_col: str, prefix: str) -> DataFrame:
-    n = linked.select(F.explode(array_col).alias("name")).filter(
-        F.col("name").isNotNull() & (F.trim("name") != "")
-    )
-    # dedup on the slug ID, not the display string: 'Deep  Learning'
-    # and 'deep learning' share a slug and must be ONE node (D1)
-    return n.groupBy(
-        F.concat(F.lit(prefix + ":"),
-                 _slug_expr(F.trim("name"))).alias("id")
-    ).agg(F.min(F.trim("name")).alias("display_name"))
+#: label -> (linked column holding its names, id twin); the array
+#: columns hold many names per mention
+_NAMED = {"Topic": ("topics", ids.topic_id_col),
+          "Funder": ("funders", ids.funder_id_col),
+          "Publisher": ("publisher", ids.publisher_id_col)}
 
 
-def publisher_nodes(linked: DataFrame) -> DataFrame:
-    p = linked.filter(
-        F.col("publisher").isNotNull() & (F.trim("publisher") != "")
-    ).select(F.trim("publisher").alias("display_name"))
-    return p.groupBy(
-        F.concat(F.lit("publisher:"), _slug_expr("display_name")).alias("id")
-    ).agg(F.min("display_name").alias("display_name"))
+def _named(df: DataFrame, label: str, *keep: str) -> DataFrame:
+    """(*keep, id, display_name): one row per non-blank name of a
+    slug-keyed ``label`` in ``df``."""
+    col, id_col = _NAMED[label]
+    name = F.explode(col) if label != "Publisher" else F.col(col)
+    n = df.select(*keep, name.alias("name"))
+    return n.select(
+        *keep, id_col("name").alias("id"),
+        ids.strip_col("name").alias("display_name"),
+    ).filter(F.col("id").isNotNull())
+
+
+def entity_nodes(linked: DataFrame) -> dict[str, DataFrame]:
+    """One row per entity id for every label but Work. Grouped by the
+    COMPUTED id, not the raw value: two spellings that share an id
+    (' X'/'X', 'https://ror.org/x'/'ror.org/x', 'Deep  Learning'/'deep
+    learning') are ONE node — the unique-id constraint (D1) every node
+    table guarantees, and the invariant that lets build_triples skip a
+    global dedup."""
+    def first(df: DataFrame, *props: str) -> DataFrame:
+        return df.groupBy("id").agg(*[F.min(p).alias(p) for p in props])
+
+    nodes = {
+        "Author": first(_authors(linked), "display_name", "orcid"),
+        "Institution": first(_institutions(linked), "display_name",
+                             "country_code", "ror"),
+        "Source": first(_sources(linked).withColumnRenamed(
+            "venue", "display_name"), "display_name", "issn"),
+    }
+    for label in _NAMED:
+        nodes[label] = first(_named(linked, label), "display_name")
+    return nodes
 
 
 def build_edges(linked: DataFrame, works: DataFrame) -> DataFrame:
@@ -180,81 +185,34 @@ def build_edges(linked: DataFrame, works: DataFrame) -> DataFrame:
     AQE-coalesce independently. The union of per-branch dedups equals
     the old global dropDuplicates(subj, pred, obj) exactly, because no
     (subj, obj) pair can appear under two preds in one branch."""
-    author_key = F.concat(F.lit("orcid:"), F.trim(F.col("a.orcid")))
-    inst_key = F.concat(
-        F.lit("ror:"), F.element_at(F.split(F.trim(F.col("i.ror")), "/"), -1)
-    )
-    issn_key = F.concat(F.lit("issn:"), F.trim(F.col("issn")))
-
-    def tag(branch: DataFrame, pred: str) -> DataFrame:
+    def tag(df: DataFrame, subj: str, pred: str, obj: str) -> DataFrame:
         # pair dedup below, constant pred above the exchange
-        return branch.dropDuplicates(["subj", "obj"]).select(
+        return df.select(F.col(subj).alias("subj"), F.col(obj).alias("obj")
+                         ).dropDuplicates(["subj", "obj"]).select(
             "subj", F.lit(pred).alias("pred"), "obj")
 
-    authored = tag(
-        linked.select("work_key", F.explode("authors").alias("a"))
-        .filter(F.col("a.orcid").isNotNull() & (F.trim(F.col("a.orcid")) != ""))
-        .select(author_key.alias("subj"), F.col("work_key").alias("obj")),
-        "AUTHORED",
-    )
-    affiliated = tag(
-        linked.select("work_key", F.explode("authors").alias("a"), "institutions")
-        .filter(F.col("a.orcid").isNotNull() & (F.trim(F.col("a.orcid")) != ""))
-        .select(author_key.alias("subj"), F.explode("institutions").alias("i"))
-        .filter(F.col("i.ror").isNotNull() & (F.trim(F.col("i.ror")) != ""))
-        .select("subj", inst_key.alias("obj")),
-        "AFFILIATED_WITH",
-    )
-    published_in = tag(
-        linked.filter(F.col("issn").isNotNull() & (F.trim("issn") != ""))
-        .select(F.col("work_key").alias("subj"), issn_key.alias("obj")),
-        "PUBLISHED_IN",
-    )
-    cites_raw = (
+    authors = _authors(linked, "work_key", "institutions")
+    sources = _sources(linked, "work_key", "publisher")
+    cites = (
         linked.select("work_key", F.explode("referenced_dois").alias("ref"))
-        .filter(F.col("ref").isNotNull() & (F.trim("ref") != ""))
-        .select(
-            F.col("work_key").alias("subj"),
-            F.concat(F.lit("doi:"), F.lower(F.trim("ref"))).alias("obj"),
-        )
-        .filter(F.col("subj") != F.col("obj"))
+        .select("work_key", ids.work_id_col("ref").alias("ref"))
+        .filter(F.col("ref") != F.col("work_key"))
+        # closed-world endpoint existence (importer.py:293): cited work
+        # must exist as a node
+        .join(works.select(F.col("id").alias("ref")), "ref", "left_semi")
     )
-    # closed-world endpoint existence (importer.py:293): cited work
-    # must exist as a node
-    cites = tag(
-        cites_raw.join(works.select(F.col("id").alias("obj")),
-                       "obj", "left_semi"),
-        "CITES",
-    )
-    has_topic = tag(
-        linked.select("work_key", F.explode("topics").alias("t"))
-        .filter(F.col("t").isNotNull() & (F.trim("t") != ""))
-        .select(F.col("work_key").alias("subj"),
-                F.concat(F.lit("topic:"), _slug_expr(F.trim("t"))).alias("obj")),
-        "HAS_TOPIC",
-    )
-    funded_by = tag(
-        linked.select("work_key", F.explode("funders").alias("f"))
-        .filter(F.col("f").isNotNull() & (F.trim("f") != ""))
-        .select(F.col("work_key").alias("subj"),
-                F.concat(F.lit("funder:"), _slug_expr(F.trim("f"))).alias("obj")),
-        "FUNDED_BY",
-    )
-    published_by = tag(
-        linked.filter(
-            F.col("issn").isNotNull() & (F.trim("issn") != "")
-            & F.col("publisher").isNotNull() & (F.trim("publisher") != "")
-        )
-        .select(issn_key.alias("subj"),
-                F.concat(F.lit("publisher:"),
-                         _slug_expr(F.trim("publisher"))).alias("obj")),
-        "PUBLISHED_BY",
-    )
-    return (
-        authored.unionByName(affiliated).unionByName(published_in)
-        .unionByName(cites).unionByName(has_topic).unionByName(funded_by)
-        .unionByName(published_by)
-    )
+    return reduce(DataFrame.unionByName, [
+        tag(authors, "id", "AUTHORED", "work_key"),
+        tag(_institutions(authors.withColumnRenamed("id", "author"),
+                          "author"), "author", "AFFILIATED_WITH", "id"),
+        tag(sources, "work_key", "PUBLISHED_IN", "id"),
+        tag(cites, "work_key", "CITES", "ref"),
+        tag(_named(linked, "Topic", "work_key"), "work_key", "HAS_TOPIC", "id"),
+        tag(_named(linked, "Funder", "work_key"), "work_key", "FUNDED_BY",
+            "id"),
+        tag(_named(sources.withColumnRenamed("id", "source"), "Publisher",
+                   "source"), "source", "PUBLISHED_BY", "id"),
+    ])
 
 
 def enrich_node_counts(nodes: dict[str, DataFrame], edges: DataFrame,
@@ -287,84 +245,43 @@ def enrich_node_counts(nodes: dict[str, DataFrame], edges: DataFrame,
     a corpus-history fact the warehouse does not retain. With no
     ``linked``, the Institution table passes through unchanged (the
     caller keeps its last-wins merged value; documented boundary)."""
-    cites_in = (
-        edges.filter(F.col("pred") == "CITES")
-        .groupBy(F.col("obj").alias("id"))
-        .agg(F.count("*").alias("_cited"))
-    )
-    work = nodes["Work"].drop("cited_by_count").join(
-        cites_in, "id", "left").withColumn(
-        "cited_by_count", F.coalesce(F.col("_cited"), F.lit(0))
-    ).drop("_cited")
-    # Checkpoint the enriched Work HERE, before a_cited captures it:
-    # the Author citation rollup below joins against this plan, and a
-    # checkpoint applied by the caller after the fact cannot rewrite
-    # the plan a_cited already embedded — the CITES in-degree
-    # aggregation would re-run once per downstream consumer (event-log
-    # evidence: the edge scan appeared 5x when the enriched tables
-    # fanned out unmaterialized).
-    work = ckpt(work)
+    def rel(pred: str, subj: str, obj: str) -> DataFrame:
+        return edges.filter(F.col("pred") == pred).select(
+            F.col("subj").alias(subj), F.col("obj").alias(obj))
 
-    authored = edges.filter(F.col("pred") == "AUTHORED").select(
-        F.col("subj").alias("author_id"), F.col("obj").alias("work_id"))
-    a_works = authored.groupBy(F.col("author_id").alias("id")).agg(
-        F.count("*").alias("works_count"))
-    a_cited = (
-        authored.join(
-            work.select(F.col("id").alias("work_id"), "cited_by_count"),
-            "work_id", "left")
-        .groupBy(F.col("author_id").alias("id"))
-        .agg(F.sum(F.coalesce(F.col("cited_by_count"), F.lit(0)))
-             .alias("cited_by_count"))
-    )
-    author = (
-        nodes["Author"].drop("works_count", "cited_by_count")
-        .join(a_works, "id", "left").join(a_cited, "id", "left")
-        .withColumn("works_count", F.coalesce("works_count", F.lit(0)))
-        .withColumn("cited_by_count",
-                    F.coalesce("cited_by_count", F.lit(0)))
-    )
+    def works_count(df: DataFrame) -> DataFrame:
+        return df.groupBy("id").agg(F.count("*").alias("works_count"))
 
-    if linked is not None:
-        inst_key = F.concat(
-            F.lit("ror:"),
-            F.element_at(F.split(F.trim(F.col("i.ror")), "/"), -1))
-        inst_works = (
-            linked.select("work_key", F.explode("institutions").alias("i"))
-            .filter(F.col("i.ror").isNotNull() & (F.trim(F.col("i.ror")) != ""))
-            .select("work_key", inst_key.alias("id"))
-            .distinct()
-            .groupBy("id").agg(F.count("*").alias("works_count"))
-        )
-        institution = nodes["Institution"].join(
-            inst_works, "id", "left").withColumn(
-            "works_count", F.coalesce("works_count", F.lit(0)))
-    else:
-        institution = nodes["Institution"]
+    def counted(label: str, counts: DataFrame) -> DataFrame:
+        # a node with no row in ``counts`` counts 0
+        names = [c for c in counts.columns if c != "id"]
+        return (nodes[label].drop(*names).join(counts, "id", "left")
+                .withColumns({n: F.coalesce(n, F.lit(0)) for n in names}))
 
-    pub_in = edges.filter(F.col("pred") == "PUBLISHED_IN").select(
-        F.col("subj").alias("work_id"), F.col("obj").alias("source_id"))
-    s_works = pub_in.groupBy(F.col("source_id").alias("id")).agg(
-        F.count("*").alias("works_count"))
-    source = nodes["Source"].drop("works_count").join(
-        s_works, "id", "left").withColumn(
-        "works_count", F.coalesce("works_count", F.lit(0)))
-
-    pub_by = edges.filter(F.col("pred") == "PUBLISHED_BY").select(
-        F.col("subj").alias("source_id"), F.col("obj").alias("publisher_id"))
-    p_works = (
-        pub_in.join(pub_by, "source_id")
-        .select("work_id", "publisher_id").distinct()
-        .groupBy(F.col("publisher_id").alias("id"))
-        .agg(F.count("*").alias("works_count"))
-    )
-    publisher = nodes["Publisher"].drop("works_count").join(
-        p_works, "id", "left").withColumn(
-        "works_count", F.coalesce("works_count", F.lit(0)))
-
+    cites_in = rel("CITES", "citing", "id").groupBy("id").agg(
+        F.count("*").alias("cited_by_count"))
+    # Author.cited_by_count from the CITES in-degree itself, not from
+    # the enriched Work table: no enriched table is part of another's
+    # plan, so one barrier can materialize all of them at once
+    authored = rel("AUTHORED", "author", "id").join(cites_in, "id", "left")
+    a_counts = authored.groupBy(F.col("author").alias("id")).agg(
+        F.count("*").alias("works_count"),
+        F.sum(F.coalesce("cited_by_count", F.lit(0))).alias("cited_by_count"))
+    pub_in = rel("PUBLISHED_IN", "work", "source")
+    p_works = (pub_in.join(rel("PUBLISHED_BY", "source", "id"), "source")
+               .select("work", "id").distinct())
     out = dict(nodes)
-    out.update({"Work": work, "Author": author, "Institution": institution,
-                "Source": source, "Publisher": publisher})
+    out.update({
+        "Work": counted("Work", cites_in),
+        "Author": counted("Author", a_counts),
+        "Source": counted("Source", works_count(
+            pub_in.withColumnRenamed("source", "id"))),
+        "Publisher": counted("Publisher", works_count(p_works)),
+    })
+    if linked is not None:
+        out["Institution"] = counted("Institution", works_count(
+            _institutions(linked, "work_key").select("work_key", "id")
+            .distinct()))
     return out
 
 
@@ -406,14 +323,11 @@ def build_triples(nodes: dict[str, DataFrame], edges: DataFrame) -> DataFrame:
         "Funder": ["display_name"],
         "Publisher": ["display_name", "works_count"],
     }
-    parts = [edges]
+    out = edges
     for label, df in nodes.items():
         # derived-count props appear only on enriched node tables
-        parts.append(_prop_triples(
+        out = out.unionByName(_prop_triples(
             df, [p for p in prop_map[label] if p in df.columns], label))
-    out = parts[0]
-    for x in parts[1:]:
-        out = out.unionByName(x)
     # The union is duplicate-free BY CONSTRUCTION, so no global
     # dropDuplicates — at web scale that dedup was the single widest
     # shuffle in the pipeline (every triple's (subj,pred,obj) strings
@@ -463,15 +377,7 @@ def build_graph_from_linked(linked: DataFrame,
     if skip_abstracts:
         # P10 (importer.py:73-77): drop abstracts behind a config flag
         linked = linked.withColumn("abstract", F.lit(None).cast("string"))
-    nodes = {
-        "Work": work_nodes(linked),
-        "Author": author_nodes(linked),
-        "Institution": institution_nodes(linked),
-        "Source": source_nodes(linked),
-        "Topic": _named_nodes(linked, "topics", "topic"),
-        "Funder": _named_nodes(linked, "funders", "funder"),
-        "Publisher": publisher_nodes(linked),
-    }
+    nodes = {"Work": work_nodes(linked), **entity_nodes(linked)}
     if generate_embeddings:
         # optional embedding step (M4, importer.py:79-81, 350-374):
         # the driver-side loop becomes a vectorized column application;
@@ -496,9 +402,9 @@ def build_graph_from_linked(linked: DataFrame,
     # its last-stage job, and only when one consumer on this thread
     # comes first.
     #
-    # Work first: the CITES endpoint semi-join, its count enrichment
-    # and the Author citation rollup all reference it. Lazy: the edge
-    # stage below is its first consumer.
+    # Work first: the CITES endpoint semi-join and its count enrichment
+    # both reference it. Lazy: the edge stage below is its first
+    # consumer.
     nodes["Work"] = ckpt(nodes["Work"], eager=False)
     # edges: COLUMNAR stage partitioned by pred, not row-block ckpt —
     # the table is re-read by 5+ consumers (four enrichment slices,
@@ -508,11 +414,16 @@ def build_graph_from_linked(linked: DataFrame,
     edges = stage_parquet(build_edges(linked, nodes["Work"]), "edges",
                           partition_by=["pred"]).select(
         "subj", "pred", "obj")
-    # enrich_node_counts checkpoints the enriched Work itself, before
-    # the Author rollup captures it; the other six enriched tables are
-    # independent of each other: one concurrent barrier.
-    nodes = enrich_node_counts(nodes, edges, linked)
-    nodes.update(barrier({label: df for label, df in nodes.items()
-                          if label != "Work"}))
-    triples = build_triples(nodes, edges)
-    return GraphTables(nodes=nodes, edges=edges, triples=triples)
+    return finish_graph(nodes, edges, linked)
+
+
+def finish_graph(nodes: dict[str, DataFrame], edges: DataFrame,
+                 linked: DataFrame | None = None) -> GraphTables:
+    """The step every build and every merge ends with: the count
+    properties (``enrich_node_counts``), all seven enriched node
+    tables materialized by one concurrent barrier (they are independent
+    of each other, and the triples, writes and search each read them),
+    then the triples. ``edges`` must already be materialized."""
+    nodes = barrier(enrich_node_counts(nodes, edges, linked))
+    return GraphTables(nodes=nodes, edges=edges,
+                       triples=build_triples(nodes, edges))

@@ -25,9 +25,10 @@ SPARK_CONF: dict[str, str] = {
     # total) down to ONE task — a hard serialization point that capped
     # the whole phase at 1/N of the cluster (event-log evidence:
     # s18 sr=84MB t=1 at every core count; 8m restores 14 tasks and
-    # cuts the stage wall ~3x at 4 cores). 1MB floor keeps the small
-    # fixed-width link-stage shuffles from collapsing to 1-2
-    # partitions mid-pipeline.
+    # cuts the stage wall ~3x at 4 cores). The 64KB minPartitionSize
+    # floor (below Spark's 1MB default) keeps the small fixed-width
+    # link-stage shuffles from collapsing to 1-2 partitions
+    # mid-pipeline.
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),

@@ -145,7 +145,7 @@ def test_cluster_map_join_is_broadcast(spark, tmp_path):
     attach a ~50-byte cluster id per row — the widest shuffle in the
     link phase. AQE's runtime SMJ->BHJ conversion still writes the
     probe-side shuffle files; only the planned broadcast avoids the
-    exchange entirely (linking.BROADCAST_CLUSTER_MAP_MAX_GROUPS)."""
+    exchange entirely (linking.BROADCAST_CLUSTER_MAP_MAX_BYTES)."""
     from openalex_neo4j_spark.corpus import build_world, write_pages_parquet
     from openalex_neo4j_spark.extract import mentions_from_pages
     from openalex_neo4j_spark.linking import link_mentions
@@ -250,6 +250,8 @@ def _last_job_id(spark) -> int:
 # submits on local[8] with 8 shuffle partitions: each AQE shuffle
 # stage, barrier, table write and driver collect is one job.
 BUILD_AND_WRITE_JOBS = 64
+#: merge_graph of the same 30-work graph onto its committed copy
+MERGE_JOBS = 74
 
 
 def test_spread_decides_from_the_file_scheme(spark, tmp_path):
@@ -333,6 +335,24 @@ def test_kg_graph_root_concurrent_cold_builds_share_one_root(spark,
             shutil.rmtree(d, ignore_errors=True)
 
 
+def test_kg_graph_root_key_follows_the_source(tmp_path):
+    """The contract graphs' cache key is a hash of the package source:
+    one changed byte in one package file names a new root."""
+    import pathlib
+    import shutil
+
+    import openalex_neo4j_spark
+    from openalex_neo4j_spark.driver_contract import _source_key
+
+    pkg = tmp_path / "pkg"
+    shutil.copytree(pathlib.Path(openalex_neo4j_spark.__file__).parent, pkg)
+    key = _source_key(pkg)
+    assert _source_key(pkg) == key
+    f = pkg / "operators" / "cc.py"
+    f.write_bytes(f.read_bytes().replace(b"\n", b" \n", 1))
+    assert _source_key(pkg) != key
+
+
 def test_build_and_write_job_budget(spark, tmp_path):
     """The build and the cold import submit no more Spark jobs than
     this budget: each job is a driver-serial round trip of fixed
@@ -348,6 +368,26 @@ def test_build_and_write_job_budget(spark, tmp_path):
     assert counts["triples"] > 0
     assert jobs <= BUILD_AND_WRITE_JOBS, (
         f"{jobs} jobs > budget {BUILD_AND_WRITE_JOBS}")
+
+
+def test_merge_job_budget(spark, tmp_path):
+    """The cumulative import's merge submits no more Spark jobs than
+    this budget (see test_build_and_write_job_budget): with it, the
+    finishing step a build and a merge share cannot grow either path
+    unseen."""
+    from openalex_neo4j_spark.corpus import build_world, pages_dataframe
+    from openalex_neo4j_spark.materialize import merge_graph, write_graph
+    from openalex_neo4j_spark.pipeline import build_graph
+
+    pages = pages_dataframe(spark, build_world(30, seed=5), num_partitions=4)
+    g = build_graph(pages)
+    root = str(tmp_path / "kg")
+    write_graph(g, root)
+    before = _last_job_id(spark)
+    counts = merge_graph(g, root)
+    jobs = _last_job_id(spark) - before
+    assert counts["triples"] > 0
+    assert jobs <= MERGE_JOBS, f"{jobs} jobs > budget {MERGE_JOBS}"
 
 
 def test_barrier_on_shared_parent_does_not_deadlock(spark):
